@@ -117,23 +117,35 @@ object FlFileJob {
 
   /** Hadoop Configuration is Writable but not java-Serializable; this
     * minimal wrapper ships the DRIVER's configuration (with its
-    * spark.hadoop.* overrides and object-store credentials) into range-
-    * read tasks instead of letting executors fall back to bare defaults.
-    * (Spark's own org.apache.spark.util.SerializableConfiguration is
-    * private[spark] at the Scala level — not reusable here.) Broadcast
-    * by the callers, so the conf ships once per executor, not once per
-    * task closure. Shared with the DSv2 connector ([[graft.sources]]) —
-    * the one copy of this wire format in the codebase. */
-  private[graft] final class SerializableConf(@transient var value: Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
+    * spark.hadoop.* overrides and object-store credentials) into tasks
+    * instead of letting executors fall back to bare defaults. (Spark's
+    * own org.apache.spark.util.SerializableConfiguration is
+    * private[spark] at the Scala level — not reusable here.)
+    *
+    * Wire format: the conf's raw entries as one flat key/value string
+    * list, rebuilt into a Configuration on first use in each JVM with
+    * the same `Configuration.set` that `readFields` calls. Writable's
+    * `write`/`readFields` would also gzip every entry's source list —
+    * for a ~1.1k-entry session conf ~7 ms to write and ~5 ms to read,
+    * against ~0.4 ms and ~1 ms here. The list is a plain field, so Java
+    * and Kryo serializers both carry it (a transient field filled by a
+    * custom writeObject would arrive null under Kryo).
+    *
+    * Always broadcast, so the conf ships once per executor, not once per
+    * task: by this object's two jobs, and once per scan by the DSv2
+    * connector ([[graft.sources]]), which opens every chunk file with
+    * read options built from it — the one copy of this wire format in
+    * the codebase. */
+  private[graft] final class SerializableConf(conf: Configuration) extends Serializable {
+    private val entries: Array[String] = {
+      import scala.jdk.CollectionConverters._
+      conf.asScala.iterator.flatMap(e => Iterator(e.getKey, e.getValue)).toArray
     }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new Configuration(false)
-      value.readFields(in)
+    @transient lazy val value: Configuration = {
+      val c = new Configuration(false)
+      var i = 0
+      while (i < entries.length) { c.set(entries(i), entries(i + 1)); i += 2 }
+      c
     }
   }
 

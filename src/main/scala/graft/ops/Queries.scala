@@ -29,9 +29,10 @@ object Queries {
     * boundaries, so a single-row-group file plans exactly ONE scan task
     * and every row-local pass downstream runs single-threaded no matter
     * how many cores the session has. When the scan plans fewer map tasks
-    * than HALF the session's default parallelism, a round-robin
-    * repartition restores map-side parallelism; the shuffle it adds
-    * moves only the degenerate (small, by construction) input. At
+    * than HALF the session's default parallelism (rounded up, and at
+    * least 2, so a single-task scan trips it at any floor above 1), a
+    * round-robin repartition restores map-side parallelism; the shuffle
+    * it adds moves only the degenerate (small, by construction) input. At
     * production scale a corpus scan plans thousands of splits, the
     * condition is false, and the guard adds NOTHING — this is the
     * scale-adaptive spelling, not a constant tuned to local mode.
@@ -48,13 +49,13 @@ object Queries {
     * q_ngram_jaccard (multi-job; the exchange sits on its first eager
     * cut's critical path) BACK to the plain reader.
     * `spark.graft.scan.minMapTasks` overrides the parallelism floor
-    * (0 disables the guard). */
+    * (0 or 1 disables the guard). */
   private def tPar(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(spark, dir, name)
     val floor = spark.conf.get("spark.graft.scan.minMapTasks",
       spark.sparkContext.defaultParallelism.toString).toInt
     require(floor >= 0, s"spark.graft.scan.minMapTasks must be >= 0, got $floor")
-    if (floor > 0 && df.rdd.getNumPartitions < math.max(1, floor / 2))
+    if (floor > 1 && df.rdd.getNumPartitions < math.max(2, (floor + 1) / 2))
       df.repartition(floor)
     else df
   }
@@ -885,7 +886,9 @@ object Queries {
       approx_count_distinct($"n_chars", 0.02).as("hll_ndv"),
       expr("percentile(n_chars, 0.5d)").as("p50"),
       expr("approx_percentile(n_chars, 0.5d, 10000)").as("ap50"))
-    exact.join(sk, "source")
+    // null-safe join: a null source is one GROUP BY group on both sides
+    // and must survive the rejoin, as it does in the oracle's GROUP BY 1
+    exact.join(sk.withColumnRenamed("source", "sk_source"), $"source" <=> $"sk_source")
       .select(
         $"source", $"exact_ndv",
         (abs($"hll_ndv" - $"exact_ndv") <= $"exact_ndv" * 0.05 + 1.0)

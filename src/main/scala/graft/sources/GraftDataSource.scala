@@ -5,12 +5,14 @@ import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{GroupType, MessageType, Type => PType, Types}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -27,6 +29,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codec.ColumnCodec
+import graft.jobs.FlFileJob.SerializableConf
 
 /** DataSource V2 read surface for the engine's encoded chunk table —
   * the declarative twin of the reference CLI's decompress direction
@@ -74,9 +77,15 @@ import graft.codec.ColumnCodec
   * Scale shape: one [[InputPartition]] per chunk file (the same
   * granularity the encoder committed — bounded by the 65k-row/16 MB
   * chunk caps, so a reader task's memory is bounded regardless of table
-  * size), planned from ONE `listStatus` RPC. [[SupportsReportStatistics]]
-  * reports the summed compressed file size so AQE can broadcast a small
-  * encoded dimension table without being told to. */
+  * size), planned from ONE `listStatus` RPC. The session's Hadoop conf
+  * ships ONCE per scan, as a broadcast key/value list
+  * ([[graft.jobs.FlFileJob.SerializableConf]]), not inside every task's
+  * reader factory, and every chunk file is opened with parquet read
+  * options built from that conf ([[GraftDataSource.openChunk]]) — so a
+  * task's fixed cost is one footer read, not a conf rebuild.
+  * [[SupportsReportStatistics]] reports the summed compressed file size
+  * so AQE can broadcast a small encoded dimension table without being
+  * told to. */
 final class GraftDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "graft"
@@ -104,6 +113,17 @@ object GraftDataSource {
     StructField("html", BinaryType),
     StructField("text", StringType),
     StructField("lang", StringType)))
+
+  /** Opens one chunk file with read options built from `conf` (the
+    * task's copy of the broadcast session conf). The one-argument
+    * `ParquetFileReader.open(InputFile)` builds default options around a
+    * FRESH Hadoop Configuration, which re-parses core-default.xml out of
+    * the jars on every open — ~10 ms per file, most of a small task. */
+  private[sources] def openChunk(file: String, conf: Configuration): ParquetFileReader = {
+    val path = new HPath(file)
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
+  }
 }
 
 final class GraftTable(path: String) extends Table with SupportsRead with SupportsWrite {
@@ -517,16 +537,20 @@ final class GraftScan(path: String, required: StructType,
     override def numRows(): OptionalLong = OptionalLong.empty()
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // one shared Configuration wire format in the codebase (Spark's own
-    // SerializableConfiguration is private[spark] at the Scala level)
-    val conf = new graft.jobs.FlFileJob.SerializableConf(
-      SparkSession.active.sessionState.newHadoopConf())
-    new GraftReaderFactory(conf, required.fieldNames, bounds, aggTokens)
+  // the session's Hadoop conf, broadcast ONCE per scan when the physical
+  // plan first asks for the reader factory: tasks fetch it from their
+  // executor's broadcast cache instead of each deserializing a copy
+  // carried in the task binary (Spark's own FileScan does the same)
+  private lazy val conf: Broadcast[SerializableConf] = {
+    val spark = SparkSession.active
+    spark.sparkContext.broadcast(new SerializableConf(spark.sessionState.newHadoopConf()))
   }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new GraftReaderFactory(conf, required.fieldNames, bounds, aggTokens)
 }
 
-final class GraftReaderFactory(conf: graft.jobs.FlFileJob.SerializableConf,
+final class GraftReaderFactory(conf: Broadcast[SerializableConf],
                                columns: Array[String],
                                bounds: GraftBounds,
                                aggTokens: Array[String])
@@ -534,10 +558,10 @@ final class GraftReaderFactory(conf: graft.jobs.FlFileJob.SerializableConf,
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     if (aggTokens.nonEmpty)
       new GraftAggReader(p.asInstanceOf[GraftInputPartition].file,
-        conf.value, aggTokens)
+        conf.value.value, aggTokens)
     else
       new GraftPartitionReader(p.asInstanceOf[GraftInputPartition].file,
-        conf.value, columns, bounds)
+        conf.value.value, columns, bounds)
 }
 
 /** Partial pushed aggregates straight off the chunk table's METADATA
@@ -558,8 +582,7 @@ final class GraftAggReader(file: String, conf: Configuration, tokens: Array[Stri
   // zero scan partitions would make Spark's final sum-of-partials NULL
   // where count(*) must be 0; min/max correctly stay null
   private val reader =
-    if (file.isEmpty) null
-    else ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf))
+    if (file.isEmpty) null else GraftDataSource.openChunk(file, conf)
   private var done = false
   private var total = 0L
   private var minUrl: Array[Byte] = null
@@ -669,8 +692,7 @@ final class GraftPartitionReader(file: String, conf: Configuration,
     cs
   }
 
-  private val reader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf))
+  private val reader = GraftDataSource.openChunk(file, conf)
 
   // anything that throws between open() and a successfully constructed
   // reader (schema lookup on a pre-columnar-layout file, a corrupt

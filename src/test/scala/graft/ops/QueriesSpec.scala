@@ -65,6 +65,34 @@ class QueriesSpec extends AnyFunSuite with SparkFixture {
         "minMapTasks=0 must disable the guard")
       assert(plain == guarded, "guarded and plain reads must produce identical results")
     } finally spark.conf.unset("spark.graft.scan.minMapTasks")
+    // low floors (a local[2] or local[3] session): the single-task scan
+    // must still trip the guard
+    for (floor <- Seq(2, 3)) {
+      spark.conf.set("spark.graft.scan.minMapTasks", floor.toString)
+      try {
+        val planLow = Queries.qMinhashLsh(spark, dir).queryExecution.executedPlan.toString
+        assert(planLow.contains("RoundRobinPartitioning"),
+          s"minMapTasks=$floor must insert the round-robin repartition")
+        assert(run() == guarded, s"minMapTasks=$floor changed the result")
+      } finally spark.conf.unset("spark.graft.scan.minMapTasks")
+    }
+  }
+
+  test("sketch bounds keep a null-source group, as the oracle's GROUP BY does") {
+    import spark.implicits._
+    val dir = tmpDir("graft-queries-sketch")
+    val docs = (0L until 60L).map { i =>
+      (i, s"text $i", "en", if (i % 3 == 0) null else s"src${i % 2}", 10L + i % 17)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.parquet(s"$dir/documents.parquet")
+    val got = Queries.qSketchBounds(spark, dir)
+      .as[(String, Long, Long, Long)].collect().sortBy(r => Option(r._1)).toSeq
+    val want = docs.groupBy($"source").agg(
+        org.apache.spark.sql.functions.countDistinct($"n_chars"))
+      .as[(String, Long)].collect().sortBy(r => Option(r._1)).toSeq
+    assert(want.head._1 == null && want.size == 3)
+    assert(got.map(r => (r._1, r._2)) == want, s"sketch bounds groups: $got, want $want")
+    assert(got.forall(r => r._3 == 1L && r._4 == 1L), s"sketch bounds out of range: $got")
   }
 
   test("line-granular ops: windows, keep-first winners, exact df means, empty-doc guard") {

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.net.URI
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path => HPath, PositionedReadable, RawLocalFileSystem, Seekable}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,16 +11,25 @@ import graft.SparkFixture
 import graft.jobs.{DecodeJob, EncodeJob}
 
 /** Test-only local FS that counts every byte its streams hand out —
-  * registered under `cntfile://` so a spec can measure the connector's
-  * ACTUAL disk I/O (Hadoop's built-in Statistics miss positioned reads).
-  * Deliberately NOT ByteBufferReadable: parquet then takes the heap-read
-  * path, which all funnels through the overloads counted here. */
+  * registered under `cntfile://` (or any other scheme a spec maps to it)
+  * so a spec can measure the connector's ACTUAL disk I/O (Hadoop's
+  * built-in Statistics miss positioned reads). Deliberately NOT
+  * ByteBufferReadable: parquet then takes the heap-read path, which all
+  * funnels through the overloads counted here. */
 object CountingLocalFs {
   val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 class CountingLocalFs extends RawLocalFileSystem {
-  override def getScheme: String = "cntfile"
-  override def getUri: URI = URI.create("cntfile:///")
+  // the scheme this instance was registered under, so its own paths
+  // pass FileSystem.checkPath (unset until initialize: the superclass
+  // constructor already asks for the uri)
+  private var scheme: String = _
+  override def initialize(name: URI, conf: Configuration): Unit = {
+    scheme = name.getScheme
+    super.initialize(name, conf)
+  }
+  override def getScheme: String = if (scheme == null) "cntfile" else scheme
+  override def getUri: URI = URI.create(s"$getScheme:///")
   override def open(f: HPath, bufferSize: Int): FSDataInputStream =
     new FSDataInputStream(new CountingIn(super.open(f, bufferSize)))
 }
@@ -346,6 +356,38 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture {
       .select($"url").as[String].collect().sorted.toSeq
     assert(got == want && got.nonEmpty,
       s"legacy-table ts filter mismatch: got ${got.size}, want ${want.size}")
+  }
+
+  test("a Hadoop setting made only at session level reaches the DSv2 readers") {
+    import spark.implicits._
+    // cntfile2 is mapped through spark.conf ONLY, never on
+    // sparkContext.hadoopConfiguration, and with the FileSystem cache
+    // off: every reader must resolve the scheme from the conf the scan
+    // shipped it, not from an instance the driver's listing cached
+    assert(spark.sparkContext.hadoopConfiguration.get("fs.cntfile2.impl") == null)
+    spark.conf.set("fs.cntfile2.impl", classOf[CountingLocalFs].getName)
+    spark.conf.set("fs.cntfile2.impl.disable.cache", "true")
+    try {
+      val cdir = s"cntfile2://$dir"
+      val source = WebtextGen.pages(spark, 800L, partitions = 4)
+      val one = source.select($"url").as[String].collect().sorted.apply(321)
+      val b0 = CountingLocalFs.bytesRead.get()
+      val got = spark.read.format("graft").load(cdir).filter($"url" === one)
+        .select($"url", $"lang").as[(String, String)].collect().toSeq
+      val rowBytes = CountingLocalFs.bytesRead.get() - b0
+      val want = source.filter($"url" === one)
+        .select($"url", $"lang").as[(String, String)].collect().toSeq
+      assert(got == want && got.length == 1, s"session-conf read mismatch: $got vs $want")
+      assert(rowBytes > 0, "row reader did not read through the session-registered fs")
+      // the pushed count goes through the other reader (GraftAggReader)
+      val b1 = CountingLocalFs.bytesRead.get()
+      assert(spark.read.format("graft").load(cdir).count() == 800L)
+      assert(CountingLocalFs.bytesRead.get() - b1 > 0,
+        "aggregate reader did not read through the session-registered fs")
+    } finally {
+      spark.conf.unset("fs.cntfile2.impl")
+      spark.conf.unset("fs.cntfile2.impl.disable.cache")
+    }
   }
 
   test("count(*) pushdown answers from chunk metadata, refuses under predicates") {
