@@ -503,12 +503,14 @@ object EncodeJob {
     // chunk job, chunks- after its commit, both removed after the manifest
     // commit — every crash window identifies itself by which markers
     // survive, so reconcile never has to scan for it.
-    // _migrated is stamped ONLY for fresh or already-migrated tables: a
+    // _migrated is stamped ONLY for a fresh table (no chunks yet): a
     // LEGACY table (chunks exist, no marker) must keep its one-time
     // full-scan reconcile reachable — stamping it here (e.g. a
     // resume=false run that skipped reconcileOrphans) would foreclose
     // that migration forever and leave legacy orphan chunks invisible.
-    if (TableIO.exists(spark, migratedMarker(outDir)) ||
+    // An already-migrated table keeps its marker; re-creating it would
+    // cost a file create per run and change nothing.
+    if (!TableIO.exists(spark, migratedMarker(outDir)) &&
         !TableIO.exists(spark, chunksDir(outDir)))
       TableIO.touch(spark, migratedMarker(outDir))
     TableIO.touch(spark, s"${attemptsDir(outDir)}/begin-$attemptId")
@@ -527,6 +529,9 @@ object EncodeJob {
     // divergence (two attempts that encoded different data) fails loudly
     // instead of being masked by an arbitrary pick.
     val finishedAt = System.currentTimeMillis()
+    // checked ONCE, before this run's manifest write: when no manifest
+    // existed, this run's rows ARE the whole manifest
+    val manifestExisted = TableIO.exists(spark, manifestDir(outDir))
     // (pids, rows, rawBytes, encBytes, flBaselineBytes) committed by
     // THIS invocation, for Result
     var thisRun = (0L, 0L, 0L, 0L, 0L)
@@ -542,7 +547,7 @@ object EncodeJob {
       // already committed in an earlier wave
       val rowsDf = {
         val fresh = manifestRowsFromChunks(spark, cur, finishedAt)
-        if (!TableIO.exists(spark, manifestDir(outDir))) fresh
+        if (!manifestExisted) fresh
         else fresh.join(
           manifestScan(spark, outDir)
             .filter($"attemptId" === attemptId).select($"pid"),
@@ -587,21 +592,21 @@ object EncodeJob {
     TableIO.delete(spark, s"${attemptsDir(outDir)}/begin-$attemptId")
     TableIO.delete(spark, s"${attemptsDir(outDir)}/chunks-$attemptId")
 
-    // empty input with no prior runs leaves no manifest at all — report
-    // zeros instead of failing the read. wholeTableStats=false skips the
-    // whole-manifest aggregation entirely (it grows with every committed
-    // attempt — a long-lived stream must not pay it per micro-batch) and
-    // reports this run's totals instead.
+    // wholeTableStats=false skips the whole-manifest aggregation entirely
+    // (it grows with every committed attempt — a long-lived stream must
+    // not pay it per micro-batch) and reports this run's totals instead.
+    // So does a run that found no manifest: its rows are the whole
+    // manifest (none when the input was empty), and no resume-skipped
+    // pid exists — `completed` comes from manifest rows, including those
+    // reconcile writes.
     // stats._1 is pids committed THIS RUN in both branches: the
     // whole-table branch counts distinct manifest pids and subtracts the
     // resume-skipped ones there, so the Result construction below never
     // has to re-adjust per branch (a past review misread exactly that).
     val stats =
-      if (!cfg.wholeTableStats)
+      if (!cfg.wholeTableStats || !manifestExisted)
         (thisRun._1, Some(thisRun._2), Some(thisRun._3), Some(thisRun._4),
           Some(thisRun._5))
-      else if (!TableIO.exists(spark, manifestDir(outDir)))
-        (0L, None: Option[Long], None: Option[Long], None: Option[Long], None: Option[Long])
       else {
         val w = manifestScan(spark, outDir)
           // DISTINCT pids, not manifest rows: a pid can carry one manifest

@@ -132,15 +132,16 @@ object FlFileJob {
     * custom writeObject would arrive null under Kryo).
     *
     * Always broadcast, so the conf ships once per executor, not once per
-    * task: by this object's two jobs, and once per scan by the DSv2
-    * connector ([[graft.sources]]), which opens every chunk file with
-    * read options built from it — the one copy of this wire format in
-    * the codebase. */
+    * task: by this object's two jobs, and by the DSv2 connector
+    * ([[graft.sources]]), which shares one broadcast across scans while
+    * [[sameEntries]] holds and opens every chunk file with read options
+    * built from it — the one copy of this wire format in the codebase. */
   private[graft] final class SerializableConf(conf: Configuration) extends Serializable {
     private val entries: Array[String] = {
       import scala.jdk.CollectionConverters._
       conf.asScala.iterator.flatMap(e => Iterator(e.getKey, e.getValue)).toArray
     }
+    def sameEntries(o: SerializableConf): Boolean = entries.sameElements(o.entries)
     @transient lazy val value: Configuration = {
       val c = new Configuration(false)
       var i = 0

@@ -4,14 +4,19 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{GroupType, MessageType, Type => PType, Types}
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -21,6 +26,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.catalog.SupportsWrite
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.expressions.NamedReference
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, InsertableRelation, LessThan, LessThanOrEqual}
@@ -77,13 +83,26 @@ import graft.jobs.FlFileJob.SerializableConf
   * Scale shape: one [[InputPartition]] per chunk file (the same
   * granularity the encoder committed — bounded by the 65k-row/16 MB
   * chunk caps, so a reader task's memory is bounded regardless of table
-  * size), planned from ONE `listStatus` RPC. The session's Hadoop conf
-  * ships ONCE per scan, as a broadcast key/value list
+  * size), planned from ONE `listStatus` RPC of `chunks/`. A scan with
+  * pushed url or warc_ts bounds plans only the files that can match: a
+  * file is dropped at plan time when the row-group predicate the reader
+  * applies in the task ([[GraftDataSource.keptRowGroups]]) keeps none of
+  * the row groups in its footer, so a url lookup launches one task per
+  * candidate file, not one per table file. Footers come from a bounded
+  * JVM-wide cache keyed by (path, length, modification time) — chunk
+  * files are immutable once committed, and a later commit's new files
+  * are cache misses. Unfiltered scans and the pushed aggregates read no
+  * footer at plan time. The scan reports `chunkFilesListed` and
+  * `chunkFilesPruned` as driver metrics. The session's Hadoop conf
+  * ships as a broadcast key/value list
   * ([[graft.jobs.FlFileJob.SerializableConf]]), not inside every task's
-  * reader factory, and every chunk file is opened with parquet read
-  * options built from that conf ([[GraftDataSource.openChunk]]) — so a
-  * task's fixed cost is one footer read, not a conf rebuild.
-  * [[SupportsReportStatistics]] reports the summed compressed file size
+  * reader factory, and consecutive scans share one broadcast while the
+  * session's Hadoop settings stay the same
+  * ([[GraftDataSource.confBroadcast]]). Every chunk file is opened with
+  * parquet read options built from that conf
+  * ([[GraftDataSource.openChunk]]) — so a task's fixed cost is one
+  * footer read, not a conf rebuild.
+  * [[SupportsReportStatistics]] reports the planned files' summed size
   * so AQE can broadcast a small encoded dimension table without being
   * told to. */
 final class GraftDataSource extends TableProvider
@@ -119,10 +138,108 @@ object GraftDataSource {
     * `ParquetFileReader.open(InputFile)` builds default options around a
     * FRESH Hadoop Configuration, which re-parses core-default.xml out of
     * the jars on every open — ~10 ms per file, most of a small task. */
-  private[sources] def openChunk(file: String, conf: Configuration): ParquetFileReader = {
-    val path = new HPath(file)
-    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
-      HadoopReadOptions.builder(conf, path).build())
+  private[sources] def openChunk(file: String, conf: Configuration): ParquetFileReader =
+    open(HadoopInputFile.fromPath(new HPath(file), conf), conf)
+
+  private def open(in: HadoopInputFile, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(in, HadoopReadOptions.builder(conf, in.getPath).build())
+
+  /** The last scan's conf broadcast, with its SparkContext and entries. */
+  private var sharedConf: (SparkContext, SerializableConf, Broadcast[SerializableConf]) = null
+
+  /** `conf` as a broadcast. Consecutive scans in one session carry the
+    * same entries, so a scan reuses the previous scan's broadcast when
+    * its SparkContext and entries match; a fresh broadcast per scan cost
+    * ~4 ms of planning (serialize and write to the block store) plus a
+    * Configuration rebuild in each executor's first task. A changed
+    * setting is a new broadcast. */
+  private[sources] def confBroadcast(sc: SparkContext, conf: Configuration)
+      : Broadcast[SerializableConf] = synchronized {
+    val wire = new SerializableConf(conf)
+    if (sharedConf == null || !(sharedConf._1 eq sc) || !sharedConf._2.sameEntries(wire))
+      sharedConf = (sc, wire, sc.broadcast(wire))
+    sharedConf._3
+  }
+
+  /** ts statistics are schema-gated per FILE: a pre-round-7 chunk file
+    * has no tsMin/tsMax columns, and a predicate referencing a missing
+    * column would make the row-group statistics filter treat it as
+    * all-null and WRONGLY drop every group — such files fall back to
+    * exact row filtering on the decoded warc_ts block. */
+  private[sources] def hasTsStats(schema: GroupType): Boolean =
+    schema.containsField("tsMin") && schema.containsField("tsMax")
+
+  /** The row groups of one chunk file whose (urlMin, urlMax) /
+    * (tsMin, tsMax) STATISTICS can intersect `bounds`; None when no
+    * pushed bound applies to this file (no bounds, or only ts bounds on
+    * a file without ts statistics), i.e. every group is kept. The ONE
+    * row-group predicate of the read path: [[GraftScan]] drops a file
+    * at plan time when this keeps none of its groups, and
+    * [[GraftPartitionReader]] skips the groups it drops — so a pruned
+    * file is exactly one the reader would have read nothing from.
+    * Strict url bounds weaken to non-strict here — conservative. */
+  private[sources] def keptRowGroups(bounds: GraftBounds, groups: java.util.List[BlockMetaData],
+                                     schema: MessageType): Option[java.util.List[BlockMetaData]] = {
+    val preds = scala.collection.mutable.ArrayBuffer.empty[FilterPredicate]
+    bounds.allUrlLo.foreach(lo => preds += FilterApi.gtEq(
+      FilterApi.binaryColumn("urlMax"), Binary.fromConstantByteArray(lo)))
+    bounds.allUrlHi.foreach(hi => preds += FilterApi.ltEq(
+      FilterApi.binaryColumn("urlMin"), Binary.fromConstantByteArray(hi)))
+    if (hasTsStats(schema)) {
+      // an all-null-ts chunk stores null stats; parquet's statistics
+      // visitor then drops the group for gtEq/ltEq — CORRECT here, a
+      // ts-range predicate cannot match a null ts (SQL comparison)
+      bounds.tsLo.foreach(lo => preds += FilterApi.gtEq(
+        FilterApi.longColumn("tsMax"), java.lang.Long.valueOf(lo)))
+      bounds.tsHi.foreach(hi => preds += FilterApi.ltEq(
+        FilterApi.longColumn("tsMin"), java.lang.Long.valueOf(hi)))
+    }
+    if (preds.isEmpty) None
+    else Some(RowGroupFilter.filterRowGroups(
+      FilterCompat.get(preds.reduce(FilterApi.and(_, _))), groups, schema))
+  }
+
+  /** The statistics columns [[keptRowGroups]] reads; a cached footer
+    * keeps only these column chunks of each row group. */
+  private val StatsColumns = Set("urlMin", "urlMax", "tsMin", "tsMax")
+
+  /** Footer statistics of committed chunk files for plan-time pruning.
+    * Committed chunk files are immutable, so an entry keyed by (path,
+    * length, modification time) never goes stale: a rewritten path is a
+    * new key, and a file added by a later commit is a miss. One
+    * JVM-wide LRU with a fixed bound; each entry holds the file schema
+    * and, per row group, only the [[StatsColumns]] chunks — a few
+    * hundred bytes per group, never the payload columns' metadata. */
+  private val MaxCachedFooters = 4096
+  private val footers =
+    new java.util.LinkedHashMap[(String, Long, Long), (MessageType, java.util.List[BlockMetaData])](
+        64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long, Long), (MessageType, java.util.List[BlockMetaData])]) =
+        size() > MaxCachedFooters
+    }
+
+  private[sources] def footerStats(st: FileStatus, conf: Configuration)
+      : (MessageType, java.util.List[BlockMetaData]) = {
+    val key = (st.getPath.toString, st.getLen, st.getModificationTime)
+    val hit = footers.synchronized(footers.get(key))
+    if (hit != null) hit
+    else {
+      val reader = open(HadoopInputFile.fromStatus(st, conf), conf)
+      val stats = try {
+        val footer = reader.getFooter
+        val groups = new java.util.ArrayList[BlockMetaData]()
+        footer.getBlocks.forEach { b =>
+          val g = new BlockMetaData()
+          g.setRowCount(b.getRowCount)
+          b.getColumns.forEach(c => if (StatsColumns(c.getPath.toDotString)) g.addColumn(c))
+          groups.add(g)
+        }
+        (footer.getFileMetaData.getSchema, groups)
+      } finally reader.close()
+      footers.synchronized(footers.put(key, stats))
+      stats
+    }
   }
 }
 
@@ -450,6 +567,21 @@ final class GraftScanBuilder(path: String) extends ScanBuilder
 
 final case class GraftInputPartition(file: String, length: Long) extends InputPartition
 
+/** Driver metrics of the plan-time file prune, shown on the scan node's
+  * SQL metrics: the chunk files listed, and how many of them footer
+  * statistics ruled out (listed minus planned input partitions). */
+final class ChunkFilesListedMetric extends CustomSumMetric {
+  override def name(): String = ChunkFilesListedMetric.Name
+  override def description(): String = "chunk files listed"
+}
+object ChunkFilesListedMetric { val Name = "chunkFilesListed" }
+
+final class ChunkFilesPrunedMetric extends CustomSumMetric {
+  override def name(): String = ChunkFilesPrunedMetric.Name
+  override def description(): String = "chunk files pruned by footer statistics"
+}
+object ChunkFilesPrunedMetric { val Name = "chunkFilesPruned" }
+
 final class GraftScan(path: String, required: StructType,
                       bounds: GraftBounds, aggTokens: Array[String])
     extends Scan with Batch with SupportsReportStatistics {
@@ -485,33 +617,61 @@ final class GraftScan(path: String, required: StructType,
       s"PushedBounds=[${bounds.describe}]$agg"
   }
 
-  private lazy val partitions: Array[GraftInputPartition] = {
-    val spark = SparkSession.active
+  private lazy val hconf: Configuration = SparkSession.active.sessionState.newHadoopConf()
+
+  /** The table's chunk files, from ONE `listStatus` of `chunks/`. */
+  private lazy val listed: Array[FileStatus] = {
     // the listing below assumes the parquet chunk layout; under another
     // configured table format (e.g. iceberg: data/ + metadata/ subdirs)
     // it would see no plain files and silently return an EMPTY relation
     // for a populated table — fail loudly instead
-    val fmt = TableIO.format(spark)
+    val fmt = TableIO.format(SparkSession.active)
     require(fmt == "parquet",
       s"graft DSv2 read supports the parquet chunk layout; " +
         s"spark.graft.table.format=$fmt is configured — read this table " +
         "through DecodeJob/TableIO instead")
-    val hconf = spark.sessionState.newHadoopConf()
     val root = new HPath(path)
     val fs = root.getFileSystem(hconf)
-    require(fs.exists(root),
-      s"graft source: no such encode directory: $path")
-    val chunks = new HPath(root, "chunks")
-    // an encode of an EMPTY input commits no chunks dir — that is a
-    // valid zero-row table, not an error (mirror chunkMetaScan's
-    // pinned-schema behavior)
-    if (!fs.exists(chunks)) Array.empty
-    else fs.listStatus(chunks)
+    val all =
+      try fs.listStatus(new HPath(root, "chunks"))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          // an encode of an EMPTY input commits no chunks dir — that is
+          // a valid zero-row table, not an error (mirror chunkMetaScan's
+          // pinned-schema behavior); only a missing root is
+          require(fs.exists(root), s"graft source: no such encode directory: $path")
+          Array.empty[FileStatus]
+      }
+    all.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
+  /** The listed files that can hold a matching row: with pushed bounds,
+    * a file is dropped when [[GraftDataSource.keptRowGroups]] keeps none
+    * of its row groups (footers come from the JVM-wide cache). An
+    * unfiltered scan reads no footer here. */
+  private lazy val partitions: Array[GraftInputPartition] =
+    listed
       .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+        bounds.isEmpty || {
+          val (schema, groups) = GraftDataSource.footerStats(st, hconf)
+          GraftDataSource.keptRowGroups(bounds, groups, schema).forall(!_.isEmpty)
+        }
       }
       .map(st => GraftInputPartition(st.getPath.toString, st.getLen))
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new ChunkFilesListedMetric, new ChunkFilesPrunedMetric)
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    def metric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+    Array(metric(ChunkFilesListedMetric.Name, listed.length.toLong),
+      metric(ChunkFilesPrunedMetric.Name, (listed.length - partitions.length).toLong))
   }
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -537,14 +697,12 @@ final class GraftScan(path: String, required: StructType,
     override def numRows(): OptionalLong = OptionalLong.empty()
   }
 
-  // the session's Hadoop conf, broadcast ONCE per scan when the physical
-  // plan first asks for the reader factory: tasks fetch it from their
+  // the session's Hadoop conf as a broadcast, fetched when the physical
+  // plan first asks for the reader factory: tasks read it from their
   // executor's broadcast cache instead of each deserializing a copy
   // carried in the task binary (Spark's own FileScan does the same)
-  private lazy val conf: Broadcast[SerializableConf] = {
-    val spark = SparkSession.active
-    spark.sparkContext.broadcast(new SerializableConf(spark.sessionState.newHadoopConf()))
-  }
+  private lazy val conf: Broadcast[SerializableConf] =
+    GraftDataSource.confBroadcast(SparkSession.active.sparkContext, hconf)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(conf, required.fieldNames, bounds, aggTokens)
@@ -703,19 +861,14 @@ final class GraftPartitionReader(file: String, conf: Configuration,
   // typed pattern (`keptGroups: java.util.Set[...]`) refuses to match
   // null, and keptGroups is legitimately null when no bounds are pushed
   private val init: (MessageType, org.apache.parquet.io.MessageColumnIO, Boolean,
-      java.util.Set[org.apache.parquet.hadoop.metadata.BlockMetaData]) =
+      java.util.Set[BlockMetaData]) =
     try {
       val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
       // upcast to GroupType: MessageType inherits a varargs getType
       // overload that makes the String call ambiguous
       val fsGroup: GroupType = fileSchema
-      // ts statistics are schema-gated per FILE: a pre-round-7 chunk
-      // file has no tsMin/tsMax columns, and a predicate referencing a
-      // missing column would make the row-group statistics filter treat
-      // it as all-null and WRONGLY drop every group — such files fall
-      // back to exact row filtering on the decoded warc_ts block
-      val tsStats = hasTsBounds &&
-        fsGroup.containsField("tsMin") && fsGroup.containsField("tsMax")
+      // ts statistics are schema-gated per FILE (see hasTsStats)
+      val tsStats = hasTsBounds && GraftDataSource.hasTsStats(fsGroup)
       /* Pruned parquet projection: metadata primitives + ONLY the needed
        * columns' `block` leaves — select(url) never reads text bytes. */
       val fields = scala.collection.mutable.ArrayBuffer.empty[PType]
@@ -735,49 +888,25 @@ final class GraftPartitionReader(file: String, conf: Configuration,
       // ASSEMBLY only — every text/html byte still coming off the disk.
       reader.setRequestedSchema(rq)
 
-      // row-group STATISTICS filter on the chunk metadata columns: a row
-      // group whose (urlMin, urlMax) / (tsMin, tsMax) stats cannot
-      // intersect the pushed bounds is SKIPPED before any of its column
-      // chunks are read (skipNextRowGroup below — zero I/O for dropped
-      // groups). A group's stats span the UNION of the chunk rows it
-      // holds (pid-hash file assignment mixes ranges within a file), so
-      // this prunes at row-group granularity; the per-chunk-row prune in
-      // decodeChunkRow then skips the decode of individual non-matching
-      // chunks the surviving group still carries. Applied AFTER open
-      // (not as a record filter at open time) so the predicate can be
-      // built against the columns this file's schema actually has.
-      // Strict url bounds weaken to non-strict here — conservative.
-      val kept: java.util.Set[org.apache.parquet.hadoop.metadata.BlockMetaData] = {
-        import org.apache.parquet.filter2.predicate.FilterApi
-        import org.apache.parquet.io.api.Binary
-        val preds = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.parquet.filter2.predicate.FilterPredicate]
-        if (hasUrlBounds) {
-          bounds.allUrlLo.foreach(lo => preds += FilterApi.gtEq(
-            FilterApi.binaryColumn("urlMax"), Binary.fromConstantByteArray(lo)))
-          bounds.allUrlHi.foreach(hi => preds += FilterApi.ltEq(
-            FilterApi.binaryColumn("urlMin"), Binary.fromConstantByteArray(hi)))
-        }
-        if (tsStats) {
-          // an all-null-ts chunk stores null stats; parquet's statistics
-          // visitor then drops the group for gtEq/ltEq — CORRECT here, a
-          // ts-range predicate cannot match a null ts (SQL comparison)
-          bounds.tsLo.foreach(lo => preds += FilterApi.gtEq(
-            FilterApi.longColumn("tsMax"), java.lang.Long.valueOf(lo)))
-          bounds.tsHi.foreach(hi => preds += FilterApi.ltEq(
-            FilterApi.longColumn("tsMin"), java.lang.Long.valueOf(hi)))
-        }
-        if (preds.isEmpty) null
-        else {
-          val filter = org.apache.parquet.filter2.compat.FilterCompat.get(
-            preds.reduce(FilterApi.and(_, _)))
-          // BlockMetaData has identity equality, so the HashSet is an
-          // identity set over the reader's own block list
-          new java.util.HashSet(
-            org.apache.parquet.filter2.compat.RowGroupFilter.filterRowGroups(
-              filter, reader.getRowGroups, fileSchema))
-        }
-      }
+      // row-group STATISTICS filter on the chunk metadata columns, the
+      // same predicate GraftScan already used to drop whole files at plan
+      // time (GraftDataSource.keptRowGroups): a surviving file's row
+      // groups whose (urlMin, urlMax) / (tsMin, tsMax) stats cannot
+      // intersect the pushed bounds are SKIPPED before any of their
+      // column chunks are read (skipNextRowGroup below — zero I/O for
+      // dropped groups). A group's stats span the UNION of the chunk rows
+      // it holds (pid-hash file assignment mixes ranges within a file),
+      // so this prunes at row-group granularity; the per-chunk-row prune
+      // in decodeChunkRow then skips the decode of individual
+      // non-matching chunks the surviving group still carries. Applied
+      // AFTER open (not as a record filter at open time) so the predicate
+      // is built against the columns this file's schema actually has.
+      // BlockMetaData has identity equality, so the HashSet is an
+      // identity set over the reader's own block list.
+      val kept: java.util.Set[BlockMetaData] = GraftDataSource
+        .keptRowGroups(bounds, reader.getRowGroups, fileSchema)
+        .map(new java.util.HashSet[BlockMetaData](_))
+        .orNull
       (rq, new ColumnIOFactory().getColumnIO(rq, fileSchema), tsStats, kept)
     } catch {
       case e: Throwable =>

@@ -77,6 +77,32 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     source.unpersist()
   }
 
+  test("Result totals equal the written manifest, on a fresh table and after a second wave") {
+    import spark.implicits._
+    val source = WebtextGen.pages(spark, 600L, seed = 13L).cache()
+    Seq("acc", "scan").foreach { mode =>
+      val outDir = tmpDir(s"graft-totals-$mode")
+      val cfg = EncodeJob.Config(numPartitions = 8, manifestMode = mode)
+      def check(r: EncodeJob.Result, what: String): Unit = {
+        val m = spark.read.parquet(EncodeJob.manifestDir(outDir))
+          .agg(countDistinct($"pid"), sum($"rows"), sum($"rawBytes"), sum($"encBytes"),
+            sum($"flBaselineBytes"))
+          .as[(Long, Long, Long, Long, Long)].head()
+        assert((r.pidsEncoded + r.pidsSkipped, r.rows, r.rawBytes, r.encBytes,
+          r.flBaselineBytes) == m, s"$mode, $what: $r vs manifest $m")
+      }
+      // fresh table: this run's rows are the whole manifest
+      val r1 = EncodeJob.run(spark, source, outDir, cfg.copy(pidUpperBound = Some(3)))
+      assert(r1.pidsEncoded > 0L && r1.pidsSkipped == 0L && r1.rows == r1.rowsThisRun)
+      check(r1, "fresh table")
+      // second wave onto the existing manifest: running totals
+      val r2 = EncodeJob.run(spark, source, outDir, cfg.copy(pidUpperBound = Some(6)))
+      assert(r2.pidsSkipped == r1.pidsEncoded && r2.rows > r2.rowsThisRun)
+      check(r2, "second wave")
+    }
+    source.unpersist()
+  }
+
   test("skew: a host with 50% of rows still yields bounded partition spread") {
     import spark.implicits._
     val outDir = tmpDir("graft-skew")

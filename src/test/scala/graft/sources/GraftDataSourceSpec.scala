@@ -4,7 +4,9 @@ import java.net.URI
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path => HPath, PositionedReadable, RawLocalFileSystem, Seekable}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
@@ -65,7 +67,7 @@ final class CountingIn(in: FSDataInputStream) extends java.io.InputStream
 /** The DataSource V2 read surface: `spark.read.format("graft")` must
   * equal the DecodeJob paths bit-for-bit, prune columns down to the
   * parquet block leaves, and consume url-range predicates exactly. */
-class GraftDataSourceSpec extends AnyFunSuite with SparkFixture {
+class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlanHelper {
 
   private lazy val dir = {
     val d = tmpDir("graft-dsv2")
@@ -75,6 +77,35 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture {
   }
 
   private def read(): DataFrame = spark.read.format("graft").load(dir)
+
+  /** A simulated pre-round-7 chunk table: the same chunks with the
+    * tsMin/tsMax statistics columns REMOVED. */
+  private lazy val legacyDir = {
+    val legacy = tmpDir("graft-dsv2-legacy")
+    graft.ScalingLevel.rmrf(legacy)
+    spark.read.parquet(s"$dir/chunks").drop("tsMin", "tsMax")
+      .write.mode("overwrite").parquet(s"$legacy/chunks")
+    legacy
+  }
+
+  /** The chunk files a scan of `table` lists. */
+  private def chunkFiles(table: String): Int =
+    new java.io.File(s"$table/chunks").listFiles()
+      .count(f => f.isFile && f.length > 0 && !f.getName.startsWith("_") &&
+        !f.getName.startsWith("."))
+
+  /** Runs `pred` as a graft read of `table` and over DecodeJob's decode of
+    * it (which never goes through GraftScan, so nothing is pruned), asserts
+    * both return the same rows, and returns the executed scan node. */
+  private def checkedScan(table: String, pred: Column): BatchScanExec = {
+    val df = spark.read.format("graft").load(table).filter(pred)
+    val got = df.collect().sortBy(_.getString(0)).toSeq
+    val want = DecodeJob.run(spark, table).toDF().filter(pred)
+      .collect().sortBy(_.getString(0)).toSeq
+    assert(got == want, s"pruned read of [$pred]: got ${got.size} rows, want ${want.size}")
+    collectFirst(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+      .getOrElse(fail("no BatchScanExec in\n" + df.queryExecution.executedPlan))
+  }
 
   test("full read equals DecodeJob.run on every column") {
     val got = read()
@@ -336,14 +367,10 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture {
   test("ts filter on a pre-round-7 table (no ts statistics) stays exact") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // simulate a legacy chunk table: same chunks with the tsMin/tsMax
-    // statistics columns REMOVED. The reader must fall back to the exact
+    // the legacy table (see legacyDir) must fall back to the exact
     // decoded-row filter — a predicate over the missing stats columns
     // would wrongly treat them as all-null and drop every row group
-    val legacy = tmpDir("graft-dsv2-legacy")
-    graft.ScalingLevel.rmrf(legacy)
-    spark.read.parquet(s"$dir/chunks").drop("tsMin", "tsMax")
-      .write.mode("overwrite").parquet(s"$legacy/chunks")
+    val legacy = legacyDir
     val micros = WebtextGen.pages(spark, 800L, partitions = 4)
       .select(unix_micros($"warc_ts")).as[Long].collect().sorted
     val (lo, hi) = (micros(200), micros(600))
@@ -356,6 +383,92 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture {
       .select($"url").as[String].collect().sorted.toSeq
     assert(got == want && got.nonEmpty,
       s"legacy-table ts filter mismatch: got ${got.size}, want ${want.size}")
+  }
+
+  test("url and ts bounds prune chunk files at plan time, rows unchanged") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val files = chunkFiles(dir)
+    assert(files >= 2, s"fixture has $files chunk files; pruning needs at least 2")
+    // probes at the GLOBAL MINIMUM (the trick of the I/O specs above):
+    // only the file holding it can match, every other file's footer
+    // statistics start above the probe
+    val urls = WebtextGen.pages(spark, 800L, partitions = 4)
+      .select($"url").as[String].collect().sorted
+    val micros = WebtextGen.pages(spark, 800L, partitions = 4)
+      .select(unix_micros($"warc_ts")).as[Long].collect().sorted
+    val ts = (us: Long) => timestamp_micros(lit(us))
+    val cases = Seq(
+      "url =" -> (col("url") === urls(0)),
+      "inclusive url range" -> (col("url") >= urls(0) && col("url") <= urls(20)),
+      "strict url range" -> (col("url") > urls(0) && col("url") < urls(20)),
+      "warc_ts range" -> (col("warc_ts") >= ts(micros(0)) && col("warc_ts") <= ts(micros(1))))
+    cases.foreach { case (what, pred) =>
+      val scan = checkedScan(dir, pred)
+      val planned = scan.inputPartitions.length
+      assert(planned >= 1 && planned < files,
+        s"$what planned $planned input partitions for $files chunk files")
+    }
+    // an unfiltered scan plans every file
+    assert(checkedScan(dir, lit(true)).inputPartitions.length == files)
+  }
+
+  test("the scan reports listed and pruned chunk files as driver metrics") {
+    import spark.implicits._
+    val one = read().agg(org.apache.spark.sql.functions.min("url")).as[String].head()
+    val scan = checkedScan(dir, $"url" === one)
+    val listed = scan.metrics("chunkFilesListed").value
+    val pruned = scan.metrics("chunkFilesPruned").value
+    assert(listed == chunkFiles(dir).toLong, s"chunkFilesListed $listed")
+    assert(pruned == listed - scan.inputPartitions.length && pruned > 0,
+      s"chunkFilesPruned $pruned, listed $listed, planned ${scan.inputPartitions.length}")
+  }
+
+  test("a file without ts statistics is never pruned by a ts bound") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val minTs = read().agg(min(unix_micros($"warc_ts"))).as[Long].head()
+    val pred = col("warc_ts") === timestamp_micros(lit(minTs))
+    // the same bound prunes the table that has the statistics ...
+    assert(checkedScan(dir, pred).inputPartitions.length < chunkFiles(dir))
+    // ... and plans every file of the one that lacks them
+    val files = chunkFiles(legacyDir)
+    assert(files >= 1)
+    assert(checkedScan(legacyDir, pred).inputPartitions.length == files)
+  }
+
+  test("a read after a further commit sees the new chunk files") {
+    import org.apache.spark.sql.functions._
+    val t = tmpDir("graft-dsv2-commits")
+    graft.ScalingLevel.rmrf(t)
+    def commit(seed: Long, suffix: String): Unit =
+      EncodeJob.run(spark,
+        WebtextGen.pages(spark, 400L, seed = seed, partitions = 2)
+          .withColumn("url", concat(col("url"), lit(suffix)))
+          .as[graft.model.Page](org.apache.spark.sql.Encoders.product[graft.model.Page]),
+        t, EncodeJob.Config(numPartitions = 4, resume = false,
+          attemptId = Some(s"batch-$seed"), wholeTableStats = false))
+    val pred = col("url") >= "https://h1." && col("url") < "https://h2."
+    commit(51L, "")
+    val before = checkedScan(t, pred)
+    val filesBefore = chunkFiles(t)
+    commit(52L, "/b")
+    val after = checkedScan(t, pred)
+    assert(chunkFiles(t) > filesBefore)
+    assert(after.metrics("chunkFilesListed").value == chunkFiles(t).toLong)
+    assert(after.inputPartitions.length > before.inputPartitions.length,
+      s"planned ${before.inputPartitions.length} then ${after.inputPartitions.length}")
+  }
+
+  test("consecutive scans share the conf broadcast until a Hadoop setting changes") {
+    val sc = spark.sparkContext
+    val a = GraftDataSource.confBroadcast(sc, spark.sessionState.newHadoopConf())
+    val b = GraftDataSource.confBroadcast(sc, spark.sessionState.newHadoopConf())
+    assert(a.id == b.id, "an unchanged conf was broadcast again")
+    val changed = spark.sessionState.newHadoopConf()
+    changed.set("graft.spec.probe", "1")
+    val c = GraftDataSource.confBroadcast(sc, changed)
+    assert(c.id != b.id && c.value.value.get("graft.spec.probe") == "1")
   }
 
   test("a Hadoop setting made only at session level reaches the DSv2 readers") {
