@@ -22,10 +22,13 @@ import graft.sources.TableIO
   *   reference's MPI_Allgather of sizes, fl_gpu.cu:100-109) and become
   *   the manifest — the chunk table is written once and never re-read.
   *
-  * Exactly one shuffle (the pid repartition) and exactly two jobs: the
-  * bounds sample (one pass, count+reservoir fused) and the encode+write.
-  * Encoding is shuffle-free and embarrassingly parallel, mirroring the
-  * reference's 128-aligned per-rank split
+  * Exactly one shuffle (the pid repartition). A fresh-table encode runs
+  * five Spark jobs: the bounds sample (one pass, count+reservoir fused;
+  * map stage + collect), the encode+write (shuffle map stage + write) and
+  * the manifest write. A streaming commit onto pinned bounds runs three:
+  * the encode+write and the manifest write (EncodePipelineSpec pins both
+  * counts). Encoding is shuffle-free and embarrassingly parallel,
+  * mirroring the reference's 128-aligned per-rank split
   * (/root/reference/src/file_io.cu:39-56); the reference's
   * gather-to-rank-0 (fl_gpu.cu:41-74) is inverted into a distributed
   * write + O(#pids) metadata, which is the piece that scales.
@@ -76,21 +79,6 @@ object EncodeJob {
       maxBlockRows: Int = 65536,
       resume: Boolean = true,
       seedSampleSize: Int = 10000,
-      /** Pin bounds.json only when the bounds sample saw at least this
-        * many rows. Guards streaming front ends: a tiny first micro-batch
-        * would otherwise pin unrepresentative url bounds forever.
-        * Negative = UNSET (the default): batch runs always pin;
-        * [[graft.streaming.StreamingEncode]] substitutes its own default
-        * of 16 rows/partition. An EXPLICIT 0 means "always pin, even for
-        * a tiny first micro-batch" and is honored by streaming (the
-        * sentinel exists so that choice is distinguishable from
-        * left-at-default). The guard only applies when `resume = false`
-        * (the streaming path): a resumable batch run always pins computed
-        * bounds, because re-deriving them after a crash is only identical
-        * under an identical input scan partitioning — file-split changes
-        * between runs would silently shift pid assignment against the
-        * completed-pid set. */
-      boundsPinMinRows: Long = -1L,
       /** Manifest lineage tag; None = fresh random UUID. Streaming sets
         * a deterministic per-micro-batch tag ("batch-<id>") so a replayed
         * batch is detectable and skippable (exactly-once pattern). */
@@ -104,18 +92,6 @@ object EncodeJob {
         * only, the exact work of the reference CPU path, for
         * apples-to-apples throughput comparison. */
       codecMode: String = "auto",
-      /** How manifest rows are derived after the chunk write.
-        * "acc" (default): from the kernel's per-pid accumulator summaries
-        * — zero extra jobs, but the driver holds O(#pids-this-run) state
-        * (~0.5-1 GB at 800k pids; bounded per wave when `pidUpperBound`
-        * waves are used).
-        * "scan": a distributed aggregation over the chunk table's
-        * METADATA columns (leaf-pruned — payload bytes never read),
-        * written straight to the manifest with NO driver materialization
-        * — O(1) driver state regardless of #pids; costs one extra small
-        * job. Use for single-pass encodes too large for the accumulator.
-        * Both modes produce identical manifests (spec-asserted). */
-      manifestMode: String = "acc",
       /** When false, skip the end-of-run whole-manifest totals
         * aggregation and report THIS RUN's totals in Result.rows/
         * rawBytes/encBytes/flBaselineBytes (pidsEncoded = pids committed
@@ -163,15 +139,8 @@ object EncodeJob {
     * therefore fully committed; any surviving marker names exactly the
     * attempts a crash may have left half-done — so the per-micro-batch
     * orphan reconcile is one directory listing in the steady state,
-    * independent of how large the chunk table has grown. The persistent
-    * `_migrated` file (never deleted) is what gates the fast path: an
-    * object store that drops empty directory prefixes (S3A with deleted
-    * dir markers) would otherwise make a CLEAN table look like a
-    * pre-marker legacy one and re-trigger the full-scan migration every
-    * batch. */
+    * independent of how large the chunk table has grown. */
   def attemptsDir(outDir: String) = s"$outDir/_attempts"
-
-  private def migratedMarker(outDir: String) = s"${attemptsDir(outDir)}/_migrated"
 
   // ---------------------------------------------------------------- bounds
 
@@ -203,6 +172,12 @@ object EncodeJob {
     * the naive per-partition collect is tens of GB of sampled urls on
     * the driver; grouped, it is a few hundred MB. */
   private val BoundsGroupSpan = 1024
+
+  /** Rows per requested partition the bounds sample must see before a
+    * `resume = false` (streaming) run pins bounds.json: a tiny first
+    * micro-batch would otherwise freeze unrepresentative url bounds for
+    * every later batch. */
+  private val StreamPinRowsPerPartition = 16L
 
   /** Compute (or reload pinned) url-range cut points in ONE pass: every
     * input partition keeps a fixed-size uniform reservoir of urls; a
@@ -321,7 +296,8 @@ object EncodeJob {
       // bounds" holds only under an identical input scan partitioning —
       // a resume after a crash with different file splits would otherwise
       // assign pids inconsistent with the completed-pid set.
-      if ((cfg.resume || sampledRows >= cfg.boundsPinMinRows) && bounds.nonEmpty)
+      val pinMinRows = StreamPinRowsPerPartition * cfg.numPartitions
+      if ((cfg.resume || sampledRows >= pinMinRows) && bounds.nonEmpty)
         // the ONE hand-emitted-JSON escaper (named escapes instead of the
         // old private \uXXXX variant — parseJsonStringArray accepts both)
         TableIO.writeTextFile(spark, boundsPath(outDir),
@@ -459,12 +435,6 @@ object EncodeJob {
     // row will carry, so a crash between the two commits is reconcilable
     // under the original attempt identity
     val attemptId = cfg.attemptId.getOrElse(java.util.UUID.randomUUID().toString)
-    val useScanManifest = cfg.manifestMode match {
-      case "scan" => true
-      case "acc"  => false
-      case other  => throw new IllegalArgumentException(
-        s"manifestMode must be 'acc' or 'scan', got '$other'")
-    }
     val summaryAcc = spark.sparkContext.collectionAccumulator[PidSummary]("graft.pidSummaries")
     // Hash repartition on the (already range-derived) pid, WITHOUT the
     // extra sampling pass a repartitionByRange would run over the whole
@@ -488,34 +458,20 @@ object EncodeJob {
       .sortWithinPartitions($"pid", $"url", xxhash64($"warc_ts", $"text", $"html"))
       .as[PidPage]
       .mapPartitions { it =>
-        val inner = encodePartition(it, targetBytes, maxRows, flOnly, attemptId)
-        if (useScanManifest) inner else summarizing(inner, summaryAcc)
+        summarizing(encodePartition(it, targetBytes, maxRows, flOnly, attemptId), summaryAcc)
       }
 
-    // Chunk payloads are ALREADY compressed by the codec layer, so a file-
-    // level codec on top buys ~nothing on the dominant binary leaves and
-    // costs CPU on a write-bound pipeline (BENCH.md: writes are ~70% of the
-    // 32-core encode wall). Default uncompressed; override via conf for
-    // tables whose payloads are mostly plain.
-    val chunkCompression = spark.conf.getOption("spark.graft.chunks.compression")
-      .getOrElse("uncompressed")
     // attempt lineage markers (see [[attemptsDir]]): begin- before the
     // chunk job, chunks- after its commit, both removed after the manifest
     // commit — every crash window identifies itself by which markers
     // survive, so reconcile never has to scan for it.
-    // _migrated is stamped ONLY for a fresh table (no chunks yet): a
-    // LEGACY table (chunks exist, no marker) must keep its one-time
-    // full-scan reconcile reachable — stamping it here (e.g. a
-    // resume=false run that skipped reconcileOrphans) would foreclose
-    // that migration forever and leave legacy orphan chunks invisible.
-    // An already-migrated table keeps its marker; re-creating it would
-    // cost a file create per run and change nothing.
-    if (!TableIO.exists(spark, migratedMarker(outDir)) &&
-        !TableIO.exists(spark, chunksDir(outDir)))
-      TableIO.touch(spark, migratedMarker(outDir))
     TableIO.touch(spark, s"${attemptsDir(outDir)}/begin-$attemptId")
+    // Chunk payloads are ALREADY compressed by the codec layer, so a file-
+    // level codec on top buys ~nothing on the dominant binary leaves and
+    // costs CPU on a write-bound pipeline (BENCH.md: writes are ~70% of the
+    // 32-core encode wall).
     TableIO.write(chunks.toDF(), chunksDir(outDir), SaveMode.Append,
-      Map("compression" -> chunkCompression))
+      Map("compression" -> "uncompressed"))
     TableIO.touch(spark, s"${attemptsDir(outDir)}/chunks-$attemptId")
     val tEncode = System.nanoTime()
 
@@ -532,62 +488,31 @@ object EncodeJob {
     // checked ONCE, before this run's manifest write: when no manifest
     // existed, this run's rows ARE the whole manifest
     val manifestExisted = TableIO.exists(spark, manifestDir(outDir))
+    val manifestRows = {
+      import scala.jdk.CollectionConverters._
+      summaryAcc.value.asScala
+        .groupBy(_.pid).map { case (pid, twins) =>
+          val agree = twins.forall(t =>
+            t.blocks == twins.head.blocks && t.rows == twins.head.rows &&
+              t.encBytes == twins.head.encBytes && t.textCrc32Xor == twins.head.textCrc32Xor)
+          require(agree, s"pid $pid: twin task attempts produced DIFFERENT summaries " +
+            s"(${twins.map(t => (t.blocks, t.rows, t.encBytes)).toSet}) — non-deterministic encode?")
+          twins.minBy(_.encodeNanos) // deterministic pick among agreeing twins
+        }
+        .toSeq.sortBy(_.pid)
+        .map(s => PartitionManifest(
+          s.pid, s.blocks, s.rows, s.urlMin, s.urlMax, s.rawBytes, s.encBytes,
+          s.flBaselineBytes, s.encodeNanos, s.textCrc32Xor,
+          s.codecs.map { case (c, set) => c -> set.toSeq.sorted.mkString("|") },
+          attemptId, finishedAt))
+    }
+    if (manifestRows.nonEmpty)
+      TableIO.write(spark.createDataset(manifestRows).toDF(), manifestDir(outDir), SaveMode.Append)
     // (pids, rows, rawBytes, encBytes, flBaselineBytes) committed by
     // THIS invocation, for Result
-    var thisRun = (0L, 0L, 0L, 0L, 0L)
-    if (useScanManifest) {
-      // distributed derivation: aggregate this attempt's chunk METADATA
-      // columns (leaf-pruned scan — payload bytes never read) straight
-      // into manifest rows and write them as a DataFrame; nothing O(#pids)
-      // ever reaches the driver. Twin-attempt divergence can't arise here:
-      // the aggregation reads only the chunk files the output committer
-      // actually committed.
-      val cur = chunkMetaScan(spark, outDir).filter($"attemptId" === attemptId)
-      // pidUpperBound waves may share an attemptId: skip pids this attempt
-      // already committed in an earlier wave
-      val rowsDf = {
-        val fresh = manifestRowsFromChunks(spark, cur, finishedAt)
-        if (!manifestExisted) fresh
-        else fresh.join(
-          manifestScan(spark, outDir)
-            .filter($"attemptId" === attemptId).select($"pid"),
-          Seq("pid"), "left_anti")
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val agg = rowsDf.agg(count(lit(1)), sum($"rows"), sum($"rawBytes"), sum($"encBytes"),
-          sum($"flBaselineBytes"))
-        .as[(Long, Option[Long], Option[Long], Option[Long], Option[Long])].head()
-      // guard the empty case: appending zero rows would still create the
-      // manifest dir, breaking exists()-based guards downstream
-      if (agg._1 > 0L)
-        TableIO.write(rowsDf, manifestDir(outDir), SaveMode.Append)
-      rowsDf.unpersist()
-      thisRun = (agg._1, agg._2.getOrElse(0L), agg._3.getOrElse(0L), agg._4.getOrElse(0L),
-        agg._5.getOrElse(0L))
-    } else {
-      val manifestRows = {
-        import scala.jdk.CollectionConverters._
-        summaryAcc.value.asScala
-          .groupBy(_.pid).map { case (pid, twins) =>
-            val agree = twins.forall(t =>
-              t.blocks == twins.head.blocks && t.rows == twins.head.rows &&
-                t.encBytes == twins.head.encBytes && t.textCrc32Xor == twins.head.textCrc32Xor)
-            require(agree, s"pid $pid: twin task attempts produced DIFFERENT summaries " +
-              s"(${twins.map(t => (t.blocks, t.rows, t.encBytes)).toSet}) — non-deterministic encode?")
-            twins.minBy(_.encodeNanos) // deterministic pick among agreeing twins
-          }
-          .toSeq.sortBy(_.pid)
-          .map(s => PartitionManifest(
-            s.pid, s.blocks, s.rows, s.urlMin, s.urlMax, s.rawBytes, s.encBytes,
-            s.flBaselineBytes, s.encodeNanos, s.textCrc32Xor,
-            s.codecs.map { case (c, set) => c -> set.toSeq.sorted.mkString("|") },
-            attemptId, finishedAt))
-      }
-      if (manifestRows.nonEmpty)
-        TableIO.write(spark.createDataset(manifestRows).toDF(), manifestDir(outDir), SaveMode.Append)
-      thisRun = (manifestRows.length.toLong, manifestRows.map(_.rows).sum,
-        manifestRows.map(_.rawBytes).sum, manifestRows.map(_.encBytes).sum,
-        manifestRows.map(_.flBaselineBytes).sum)
-    }
+    val thisRun = (manifestRows.length.toLong, manifestRows.map(_.rows).sum,
+      manifestRows.map(_.rawBytes).sum, manifestRows.map(_.encBytes).sum,
+      manifestRows.map(_.flBaselineBytes).sum)
     // attempt fully committed: clear its markers (see [[attemptsDir]])
     TableIO.delete(spark, s"${attemptsDir(outDir)}/begin-$attemptId")
     TableIO.delete(spark, s"${attemptsDir(outDir)}/chunks-$attemptId")
@@ -707,10 +632,7 @@ object EncodeJob {
     * as committed. Attempts that crashed before their chunks- marker
     * ROLL BACK instead ([[dropAttemptChunks]]): their chunk-job
     * completion is unprovable, so their files are deleted and the batch
-    * re-encodes on resume/replay. Legacy tables without an attempts
-    * dir get a one-time full-scan reconcile (distributed anti-join; only
-    * actual orphans are collected), after which the marker fast path
-    * applies. Returns the reconciled pid set.
+    * re-encodes on resume/replay. Returns the reconciled pid set.
     *
     * CONTRACT — single writer per outDir. The begin-only path is
     * DESTRUCTIVE: it deletes the chunk files of attempts it cannot prove
@@ -723,32 +645,21 @@ object EncodeJob {
     * when no encode is running against the table. */
   def reconcileOrphans(spark: SparkSession, outDir: String): Set[Int] = {
     if (!TableIO.exists(spark, chunksDir(outDir))) return Set.empty
-    val attDir = attemptsDir(outDir)
-    // gate on the persistent _migrated FILE, not the directory: object
-    // stores that drop empty prefixes would make a clean table look
-    // legacy and re-run the full scan every batch
-    if (TableIO.exists(spark, migratedMarker(outDir))) {
-      val names = TableIO.listDir(spark, attDir)
-      val begun = names.collect { case n if n.startsWith("begin-") => n.stripPrefix("begin-") }.toSet
-      val chunked = names.collect { case n if n.startsWith("chunks-") => n.stripPrefix("chunks-") }.toSet
-      if ((begun ++ chunked).isEmpty) return Set.empty // steady state: no jobs at all
-      // begin- without chunks-: the chunk JOB's completion is unproven —
-      // FileOutputCommitter's commitJob (v1 AND v2) is a sequence of
-      // renames, not one atomic operation, so a driver killed mid-commit
-      // can leave a PARTIAL set of files. Reconciling those would launder
-      // a half-write into committed lineage (silent loss); instead the
-      // attempt is rolled BACK — its chunk files are dropped and the
-      // batch re-encodes on resume/replay (its offsets/pids were never
-      // marked committed). Committer-independent by construction.
-      if ((begun -- chunked).nonEmpty) dropAttemptChunks(spark, outDir, begun -- chunked)
-      if (chunked.isEmpty) Set.empty
-      else reconcileAttempts(spark, outDir, chunked)
-    } else {
-      val pids = reconcileFullScan(spark, outDir)
-      // migration marker: every later call takes the O(listing) fast path
-      TableIO.touch(spark, migratedMarker(outDir))
-      pids
-    }
+    val names = TableIO.listDir(spark, attemptsDir(outDir))
+    val begun = names.collect { case n if n.startsWith("begin-") => n.stripPrefix("begin-") }.toSet
+    val chunked = names.collect { case n if n.startsWith("chunks-") => n.stripPrefix("chunks-") }.toSet
+    if ((begun ++ chunked).isEmpty) return Set.empty // steady state: no jobs at all
+    // begin- without chunks-: the chunk JOB's completion is unproven —
+    // FileOutputCommitter's commitJob (v1 AND v2) is a sequence of
+    // renames, not one atomic operation, so a driver killed mid-commit
+    // can leave a PARTIAL set of files. Reconciling those would launder
+    // a half-write into committed lineage (silent loss); instead the
+    // attempt is rolled BACK — its chunk files are dropped and the
+    // batch re-encodes on resume/replay (its offsets/pids were never
+    // marked committed). Committer-independent by construction.
+    if ((begun -- chunked).nonEmpty) dropAttemptChunks(spark, outDir, begun -- chunked)
+    if (chunked.isEmpty) Set.empty
+    else reconcileAttempts(spark, outDir, chunked)
   }
 
   /** Roll back attempts whose chunk-job completion is unproven: delete
@@ -823,40 +734,6 @@ object EncodeJob {
       TableIO.delete(spark, s"${attemptsDir(outDir)}/begin-$id")
       TableIO.delete(spark, s"${attemptsDir(outDir)}/chunks-$id")
     }
-    orphanRows.map(_.pid).toSet
-  }
-
-  /** Legacy-table reconcile (chunk layout predating attempt markers):
-    * aggregate the WHOLE chunk table's metadata into candidate manifest
-    * rows DISTRIBUTEDLY (the same [[manifestRowsFromChunks]] the other
-    * paths use — null tags coalesce to one fresh "reconcile-" tag, which
-    * anti-joins at pid level since legacy manifests can't know it), then
-    * anti-join against the manifest so only actual orphan manifest ROWS
-    * — O(#orphan (pid, attempt) pairs), never raw chunk rows — reach the
-    * driver. Runs once per table; the _migrated marker then routes every
-    * later call to the listing fast path. */
-  private def reconcileFullScan(spark: SparkSession, outDir: String): Set[Int] = {
-    import spark.implicits._
-    val fallbackTag = "reconcile-" + java.util.UUID.randomUUID().toString
-    val tagged = chunkMetaScan(spark, outDir)
-      .withColumn("attemptId", coalesce($"attemptId", lit(fallbackTag)))
-    val rows = manifestRowsFromChunks(spark, tagged, System.currentTimeMillis())
-    val orphanRows = (
-      if (!TableIO.exists(spark, manifestDir(outDir))) rows
-      else {
-        val manifestPairs = manifestScan(spark, outDir)
-          .select($"pid", $"attemptId").distinct()
-        val byPair = rows.filter($"attemptId" =!= fallbackTag)
-          .join(manifestPairs, Seq("pid", "attemptId"), "left_anti")
-        val byPid = rows.filter($"attemptId" === fallbackTag)
-          .join(manifestPairs.select($"pid").distinct(), Seq("pid"), "left_anti")
-        byPair.union(byPid)
-      })
-      .as[PartitionManifest].collect()
-      .sortBy(m => (m.pid, m.attemptId))
-    if (orphanRows.isEmpty) return Set.empty
-    TableIO.write(spark.createDataset(orphanRows.toSeq).toDF(),
-      manifestDir(outDir), SaveMode.Append)
     orphanRows.map(_.pid).toSet
   }
 

@@ -107,10 +107,7 @@ object PipelineCli {
         val input = TableIO.read(spark, in).as[graft.model.Page]
         val r = EncodeJob.run(spark, input, outDir,
           EncodeJob.Config(numPartitions = parts, pidUpperBound = cap,
-            codecMode = sys.env.getOrElse("SPARK_GRAFT_CODEC_MODE", "auto"),
-            // "scan" keeps driver state O(1) for single-pass encodes at
-            // 100k+ pids (see EncodeJob.Config.manifestMode)
-            manifestMode = sys.env.getOrElse("SPARK_GRAFT_MANIFEST_MODE", "acc")))
+            codecMode = sys.env.getOrElse("SPARK_GRAFT_CODEC_MODE", "auto")))
         // gbps divides THIS run's bytes by this run's wall — rows/rawBytes/
         // encBytes are whole-manifest totals and would inflate a resumed
         // run's throughput by every prior run's bytes

@@ -19,7 +19,8 @@ import graft.sources.TableIO
   *  - pid assignment stays consistent across micro-batches because the
   *    url-range bounds are pinned in bounds.json and reloaded by every
   *    later batch (the same mechanism batch resume uses). Pinning is
-  *    GUARDED by a minimum sample size (boundsPinMinRows): a tiny first
+  *    GUARDED by a minimum sample size (16 rows per partition, which
+  *    `EncodeJob` applies whenever `resume = false`): a tiny first
   *    micro-batch must not freeze unrepresentative bounds forever, so
   *    small batches use their locally-computed bounds without pinning and
   *    the first adequately-sized batch pins. Chunks are self-contained
@@ -65,13 +66,6 @@ object StreamingEncode {
             cfg: EncodeJob.Config = EncodeJob.Config(),
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val pageSchema = Encoders.product[Page].schema
-    // default pin guard: a batch must sample at least ~16 rows/partition
-    // before its bounds are frozen for all later batches. Only the UNSET
-    // sentinel (<0) is replaced — an explicit 0 means the caller wants
-    // even a tiny first batch to pin, and is honored.
-    val effCfg =
-      if (cfg.boundsPinMinRows >= 0L) cfg
-      else cfg.copy(boundsPinMinRows = 16L * cfg.numPartitions)
     // Refuse to start if the streaming checkpoint is GONE while the table
     // already carries batch lineage ANYWHERE: a fresh checkpoint renumbers
     // batches from 0, so the replay-skip below would match old "batch-N"
@@ -162,7 +156,7 @@ object StreamingEncode {
           // stream would pay a linearly-growing stats job per batch for
           // a log line. This-batch totals keep the per-batch cost flat.
           val r = EncodeJob.run(spark, pages, outDir,
-            effCfg.copy(resume = false, attemptId = Some(tag), wholeTableStats = false))
+            cfg.copy(resume = false, attemptId = Some(tag), wholeTableStats = false))
           // manifest is committed once run returns — record the O(1)
           // replay sidecar (a crash before this touch is covered by the
           // probe's manifest fallback)

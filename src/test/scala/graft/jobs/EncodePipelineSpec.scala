@@ -10,6 +10,37 @@ import graft.sources.WebtextGen
   * invariants at pipeline level. */
 class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
 
+  /** Descriptions of the Spark jobs `body` launches ("null" for untagged
+    * ones). The listener bus is async but FIFO: a TAGGED sentinel job runs
+    * before and after `body`, and each sentinel waits for ITS OWN start
+    * event — every job `body` launched is then in the queue between the
+    * two (waiting for merely "one event" could be satisfied by a rogue
+    * job while the sentinel is still in flight). */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+    }
+    def sentinel(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(1 to 2, 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!descs.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(descs.contains(tag), s"sentinel job $tag never reported its start")
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("graft-jobs-open")
+      body
+      sentinel("graft-jobs-close")
+      val all = scala.jdk.CollectionConverters.CollectionHasAsScala(descs).asScala.toSeq
+      all.slice(all.indexOf("graft-jobs-open") + 1, all.indexOf("graft-jobs-close"))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("e2e round-trip: byte-identical columns, size <= reference FL") {
     import spark.implicits._
     val outDir = tmpDir("graft-e2e")
@@ -80,26 +111,24 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
   test("Result totals equal the written manifest, on a fresh table and after a second wave") {
     import spark.implicits._
     val source = WebtextGen.pages(spark, 600L, seed = 13L).cache()
-    Seq("acc", "scan").foreach { mode =>
-      val outDir = tmpDir(s"graft-totals-$mode")
-      val cfg = EncodeJob.Config(numPartitions = 8, manifestMode = mode)
-      def check(r: EncodeJob.Result, what: String): Unit = {
-        val m = spark.read.parquet(EncodeJob.manifestDir(outDir))
-          .agg(countDistinct($"pid"), sum($"rows"), sum($"rawBytes"), sum($"encBytes"),
-            sum($"flBaselineBytes"))
-          .as[(Long, Long, Long, Long, Long)].head()
-        assert((r.pidsEncoded + r.pidsSkipped, r.rows, r.rawBytes, r.encBytes,
-          r.flBaselineBytes) == m, s"$mode, $what: $r vs manifest $m")
-      }
-      // fresh table: this run's rows are the whole manifest
-      val r1 = EncodeJob.run(spark, source, outDir, cfg.copy(pidUpperBound = Some(3)))
-      assert(r1.pidsEncoded > 0L && r1.pidsSkipped == 0L && r1.rows == r1.rowsThisRun)
-      check(r1, "fresh table")
-      // second wave onto the existing manifest: running totals
-      val r2 = EncodeJob.run(spark, source, outDir, cfg.copy(pidUpperBound = Some(6)))
-      assert(r2.pidsSkipped == r1.pidsEncoded && r2.rows > r2.rowsThisRun)
-      check(r2, "second wave")
+    val outDir = tmpDir("graft-totals")
+    val cfg = EncodeJob.Config(numPartitions = 8)
+    def check(r: EncodeJob.Result, what: String): Unit = {
+      val m = spark.read.parquet(EncodeJob.manifestDir(outDir))
+        .agg(countDistinct($"pid"), sum($"rows"), sum($"rawBytes"), sum($"encBytes"),
+          sum($"flBaselineBytes"))
+        .as[(Long, Long, Long, Long, Long)].head()
+      assert((r.pidsEncoded + r.pidsSkipped, r.rows, r.rawBytes, r.encBytes,
+        r.flBaselineBytes) == m, s"$what: $r vs manifest $m")
     }
+    // fresh table: this run's rows are the whole manifest
+    val r1 = EncodeJob.run(spark, source, outDir, cfg.copy(pidUpperBound = Some(3)))
+    assert(r1.pidsEncoded > 0L && r1.pidsSkipped == 0L && r1.rows == r1.rowsThisRun)
+    check(r1, "fresh table")
+    // second wave onto the existing manifest: running totals
+    val r2 = EncodeJob.run(spark, source, outDir, cfg.copy(pidUpperBound = Some(6)))
+    assert(r2.pidsSkipped == r1.pidsEncoded && r2.rows > r2.rowsThisRun)
+    check(r2, "second wave")
     source.unpersist()
   }
 
@@ -387,108 +416,88 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     assert(perCol("html")._4 < perCol("html")._3)
   }
 
-  test("manifestMode=scan produces the same manifest as the accumulator, O(1) driver state") {
+  test("a manifest rebuilt by reconcile equals the accumulator manifest") {
     import spark.implicits._
-    val accDir = tmpDir("graft-macc")
-    val scanDir = tmpDir("graft-mscan")
+    val outDir = tmpDir("graft-rebuilt")
     val ts = new java.sql.Timestamp(1700000000000L)
     // include the supplementary-plane disagreement so the distributed
     // min/max (binary/UTF-8) is pinned against the accumulator's
-    // utf8Compare merge, not just ASCII-lucky
+    // utf8Compare merge, not just ASCII-lucky. The urls sort last, in two
+    // runs of 40 (all E000 ones, then all supplementary ones), longer
+    // than the 32-row chunk cap: some chunk ends inside the E000 run and
+    // a later chunk of the same pid holds supplementary urls, so the
+    // cross-chunk max merge is where the two orders disagree
     val uE000 = "https://x/\uE000zz"
     val uSupp = "https://x/" + new String(Character.toChars(0x10000)) + "aa"
     assert(uE000 > uSupp, "UTF-16 order (sanity: the two orders must disagree)")
-    val extra = Seq(
-      graft.model.Page(uE000, ts, Array[Byte](2), "t2", "en"),
-      graft.model.Page(uSupp, ts, Array[Byte](3), "t3", "en"))
+    val extra = (0 until 40).flatMap(i => Seq(
+      graft.model.Page(s"$uE000$i", ts, Array[Byte](2), "t2", "en"),
+      graft.model.Page(s"$uSupp$i", ts, Array[Byte](3), "t3", "en")))
     val source = WebtextGen.pages(spark, 1200L, seed = 5L)
       .union(spark.createDataset(extra)).cache()
+    val cfg = EncodeJob.Config(numPartitions = 5, maxBlockRows = 32)
+    val r1 = EncodeJob.run(spark, source, outDir, cfg)
+    assert(r1.rowsThisRun == 1280L && r1.encBytesThisRun > 0L)
 
-    EncodeJob.run(spark, source, accDir,
-      EncodeJob.Config(numPartitions = 5, maxBlockRows = 256, manifestMode = "acc"))
-    val rScan = EncodeJob.run(spark, source, scanDir,
-      EncodeJob.Config(numPartitions = 5, maxBlockRows = 256, manifestMode = "scan"))
-    assert(rScan.rowsThisRun == 1202L && rScan.encBytesThisRun > 0L)
-
-    // bounds sampling is seeded + pinned identically, so pids line up and
-    // the two manifests must agree on every content field (encodeNanos
-    // and finishedAt are wall-clock; attemptId is per-run)
-    def stable(dir: String) = spark.read.parquet(EncodeJob.manifestDir(dir))
+    // every content field (encodeNanos and finishedAt are wall-clock)
+    def stable() = spark.read.parquet(EncodeJob.manifestDir(outDir))
       .select($"pid", $"blocks", $"rows", $"urlMin", $"urlMax", $"rawBytes",
-        $"encBytes", $"flBaselineBytes", $"textCrc32Xor", $"codecs")
+        $"encBytes", $"flBaselineBytes", $"textCrc32Xor", $"codecs", $"attemptId")
       .orderBy($"pid")
       .collect().map(_.toString).toSeq
-    assert(stable(scanDir) == stable(accDir))
+    val fromAccumulator = stable()
 
-    // and the scan-mode table round-trips + resumes like any other
-    assert(VerifyJob.run(spark, source, DecodeJob.run(spark, scanDir)).ok)
-    val r2 = EncodeJob.run(spark, source, scanDir,
-      EncodeJob.Config(numPartitions = 5, maxBlockRows = 256, manifestMode = "scan"))
-    assert(r2.rowsThisRun == 0L, "scan-mode resume re-encoded completed pids")
+    // crash window: chunks committed, manifest commit lost, markers left
+    rmrf(EncodeJob.manifestDir(outDir))
+    val tag = spark.read.parquet(EncodeJob.chunksDir(outDir))
+      .select($"attemptId").distinct().as[String].head()
+    graft.sources.TableIO.touch(spark, s"${EncodeJob.attemptsDir(outDir)}/begin-$tag")
+    graft.sources.TableIO.touch(spark, s"${EncodeJob.attemptsDir(outDir)}/chunks-$tag")
+    assert(EncodeJob.reconcileOrphans(spark, outDir).size == fromAccumulator.size)
+    assert(stable() == fromAccumulator)
+
+    // and the rebuilt table round-trips + resumes like any other
+    assert(VerifyJob.run(spark, source, DecodeJob.run(spark, outDir)).ok)
+    val r2 = EncodeJob.run(spark, source, outDir, cfg)
+    assert(r2.rowsThisRun == 0L, "resume after reconcile re-encoded completed pids")
     source.unpersist()
   }
 
   test("steady-state reconcile runs zero Spark jobs (marker fast path)") {
-    import spark.implicits._
     val outDir = tmpDir("graft-steady")
     val source = WebtextGen.pages(spark, 400L, seed = 9L)
     EncodeJob.run(spark, source, outDir, EncodeJob.Config(numPartitions = 3))
-
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        descs.add(String.valueOf(js.properties.getProperty("spark.job.description")))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(EncodeJob.reconcileOrphans(spark, outDir).isEmpty)
-      // the listener bus is async but FIFO: run a TAGGED sentinel job and
-      // wait for ITS OWN start event — any job reconcile had launched
-      // must then already be in the queue, identified by NOT carrying the
-      // sentinel tag (waiting for merely "one event" could be satisfied
-      // by a rogue reconcile job while the sentinel is still in flight)
-      spark.sparkContext.setJobDescription("graft-reconcile-sentinel")
-      spark.sparkContext.parallelize(1 to 2, 1).count()
-      spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!descs.contains("graft-reconcile-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val others = scala.jdk.CollectionConverters.CollectionHasAsScala(descs).asScala
-        .filterNot(_ == "graft-reconcile-sentinel").toSeq
-      assert(others.isEmpty,
-        s"clean-table reconcile launched ${others.size} jobs ($others); must be a pure FS listing")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = jobsDuring { assert(EncodeJob.reconcileOrphans(spark, outDir).isEmpty) }
+    assert(jobs.isEmpty,
+      s"clean-table reconcile launched ${jobs.size} jobs ($jobs); must be a pure FS listing")
   }
 
-  test("legacy tables (no attempts dir, null-tag chunks) reconcile once, then migrate") {
+  test("EncodeJob.run launches a fixed number of Spark jobs (fresh encode, streaming commit)") {
     import spark.implicits._
-    val outDir = tmpDir("graft-legacy")
-    val source = WebtextGen.pages(spark, 300L, seed = 33L).cache()
-    EncodeJob.run(spark, source, outDir, EncodeJob.Config(numPartitions = 2))
+    // fresh table: bounds sample (map stage + collect), encode+write
+    // (shuffle map stage + write), manifest write; no whole-manifest
+    // totals job, since no manifest existed before the run
+    val fresh = tmpDir("graft-jobs-fresh")
+    val freshJobs = jobsDuring {
+      EncodeJob.run(spark, WebtextGen.pages(spark, 600L, seed = 41L), fresh,
+        EncodeJob.Config(numPartitions = 4))
+    }
+    assert(freshJobs.size == 5, s"fresh encode launched $freshJobs")
 
-    // rebuild the pre-round-3 on-disk shape: chunks with NULL attemptId,
-    // no manifest, no attempts dir
-    val legacy = spark.read.parquet(EncodeJob.chunksDir(outDir))
-      .withColumn("attemptId", lit(null).cast("string"))
-      .localCheckpoint(true)
-    rmrf(EncodeJob.chunksDir(outDir))
-    legacy.write.parquet(EncodeJob.chunksDir(outDir))
-    rmrf(EncodeJob.manifestDir(outDir))
-    rmrf(EncodeJob.attemptsDir(outDir))
-
-    // one-time full-scan reconcile: distributed anti-join, fallback tag
-    val pids = EncodeJob.reconcileOrphans(spark, outDir)
-    assert(pids.nonEmpty)
-    val manifest = spark.read.parquet(EncodeJob.manifestDir(outDir))
-    assert(manifest.select(sum($"rows")).as[Long].head() == 300L)
-    assert(manifest.select($"attemptId").as[String].collect()
-      .forall(_.startsWith("reconcile-")))
-    assert(VerifyJob.run(spark, source, DecodeJob.run(spark, outDir)).ok)
-
-    // migrated: the attempts dir now exists and the next call is a no-op
-    assert(new java.io.File(EncodeJob.attemptsDir(outDir)).isDirectory)
-    assert(EncodeJob.reconcileOrphans(spark, outDir).isEmpty)
-    source.unpersist()
+    // streaming commit onto a table whose bounds an earlier commit pinned:
+    // encode+write and manifest write only. (A commit whose input is a
+    // parquet read inside the measured call, as in perfbench, adds that
+    // read's schema-inference job.)
+    val stream = tmpDir("graft-jobs-stream")
+    def commit(seed: Long) = EncodeJob.run(spark,
+      WebtextGen.pages(spark, 400L, seed = seed).withColumn("url", concat($"url", lit(s"/$seed")))
+        .as[graft.model.Page],
+      stream, EncodeJob.Config(numPartitions = 4, resume = false,
+        attemptId = Some(s"batch-$seed"), wholeTableStats = false))
+    commit(42L)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(EncodeJob.boundsPath(stream))))
+    val commitJobs = jobsDuring { assert(commit(43L).rowsThisRun == 400L) }
+    assert(commitJobs.size == 3, s"streaming commit launched $commitJobs")
   }
 
   test("begin-only attempts roll back (chunk-job completion is unprovable)") {
