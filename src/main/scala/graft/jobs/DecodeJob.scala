@@ -1,13 +1,8 @@
 package graft.jobs
 
-import java.nio.charset.StandardCharsets.UTF_8
-
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.codec.ColumnCodec
-import graft.sources.TableIO
 import graft.model.{EncodedChunk, Page}
 
 /** Mirror image of EncodeJob: chunks decode independently (the §1.1
@@ -15,30 +10,18 @@ import graft.model.{EncodedChunk, Page}
   * Decoded columns are bit-identical to the encoder's input — the
   * north_rule invariant, asserted by VerifyJob and the e2e suite.
   *
-  * Because every encoded column is its own top-level struct field in the
-  * chunk table (see EncodedChunk), [[runProjected]] gives true columnar
-  * reads: decoding only `url` scans only the url blocks (parquet prunes
-  * the other leaves — verify with `.explain`: ReadSchema carries just the
-  * requested fields), and a url-range predicate prunes whole chunks via
-  * the ordinary (urlMin, urlMax) columns before any block is decoded —
-  * the chunk-level analog of partition pruning. */
+  * This is the typed FULL decode. Projected and url/warc_ts-range reads
+  * go through the DSv2 scan, `spark.read.format("graft").load(outDir)`
+  * ([[graft.sources.GraftDataSource]]), which prunes block leaves, chunk
+  * files, row groups and chunks before decoding. */
 object DecodeJob {
 
-  val ColumnNames: Seq[String] = Seq("url", "warc_ts", "html", "text", "lang")
-
-  /** One shared chunk-table scan recipe for encode-side reconcile and
-    * decode (schema pinned explicitly: an empty chunks directory — an
-    * encode of an empty input — reads as zero rows instead of failing
-    * parquet schema inference). */
-  private def chunkScan(spark: SparkSession, outDir: String) =
-    EncodeJob.chunkMetaScan(spark, outDir)
-
-  /** Decoded-text CRC lineage check, shared by the full and projected
-    * decode paths: the decoded text column must reproduce the CRC the
+  /** Decoded-text CRC lineage check, shared by [[decodeChunk]] and the
+    * DSv2 reader: the decoded text column must reproduce the CRC the
     * encoder recorded for this chunk — corruption fails fast, at the
     * chunk that broke, instead of surfacing later as a verify-join
     * mismatch. */
-  private[graft] def requireTextCrc(v: graft.codec.ColumnCodec.BytesView,
+  private[graft] def requireTextCrc(v: ColumnCodec.BytesView,
                              recorded: Long, pid: Int, blockIdx: Int): Unit = {
     val crc = new java.util.zip.CRC32()
     var k = 0
@@ -51,167 +34,10 @@ object DecodeJob {
         s"!= recorded $recorded (corrupt block?)")
   }
 
-  /** Exact row-level url-range keep filter over a decoded url view, in
-    * UTF-8 BYTE order on the raw payload — the same total order the
-    * encoder sorted by, the chunk-level (urlMin, urlMax) prune uses,
-    * and Spark's own UTF8String comparison defines (Java String order,
-    * UTF-16 code units, disagrees for supplementary characters vs
-    * U+E000..U+FFFF). ONE definition of the range semantics, shared by
-    * [[runProjected]] (a single bound pair) and the DSv2 reader
-    * ([[graft.sources.GraftDataSource]], bound lists). */
-  private[graft] def urlRangeKeep(v: ColumnCodec.BytesView,
-      loB: Array[Array[Byte]], hiB: Array[Array[Byte]],
-      loStrict: Array[Array[Byte]] = Array.empty,
-      hiStrict: Array[Array[Byte]] = Array.empty): Int => Boolean =
-    j => !v.isNull(j) && {
-      val s = v.start(j)
-      val e = s + v.len(j)
-      loB.forall(lo =>
-        java.util.Arrays.compareUnsigned(v.payload, s, e, lo, 0, lo.length) >= 0) &&
-        hiB.forall(hi =>
-          java.util.Arrays.compareUnsigned(v.payload, s, e, hi, 0, hi.length) <= 0) &&
-        loStrict.forall(lo =>
-          java.util.Arrays.compareUnsigned(v.payload, s, e, lo, 0, lo.length) > 0) &&
-        hiStrict.forall(hi =>
-          java.util.Arrays.compareUnsigned(v.payload, s, e, hi, 0, hi.length) < 0)
-    }
-
-  /** Exact row-level warc_ts-range keep filter over DECODED micros: a
-    * null ts never matches (SQL comparison semantics), inclusive bound
-    * lists. ONE definition of the ts-range row semantics, shared by
-    * [[runProjected]] (a single bound pair) and the DSv2 reader
-    * ([[graft.sources.GraftDataSource]], bound lists) — the url twin
-    * [[urlRangeKeep]] exists for the same anti-drift reason. */
-  private[graft] def tsRangeKeep(micros: Array[Long], nulls: Array[Boolean],
-      loB: Array[Long], hiB: Array[Long]): Int => Boolean =
-    j => (nulls == null || !nulls(j)) &&
-      loB.forall(micros(j) >= _) && hiB.forall(micros(j) <= _)
-
   def run(spark: SparkSession, outDir: String): Dataset[Page] = {
     import spark.implicits._
-    chunkScan(spark, outDir).as[EncodedChunk]
+    EncodeJob.chunkMetaScan(spark, outDir).as[EncodedChunk]
       .mapPartitions(_.flatMap(decodeChunk))
-  }
-
-  /** Columnar decode of a subset of columns, optionally restricted to an
-    * inclusive url range and/or an inclusive warc_ts range (epoch
-    * micros). Only the requested columns' blocks are read from disk;
-    * range pruning happens on chunk metadata before decode — (urlMin,
-    * urlMax) for urls, (tsMin, tsMax) for timestamps — then exactly
-    * (row-level) on the decoded values. A NULL ts-stats pair is kept at
-    * the chunk level (on a pre-round-7 table it means UNKNOWN — pruning
-    * would silently drop real rows; on a current table it means
-    * all-null-ts, and the exact row filter drops those rows anyway —
-    * conservative either way). A null warc_ts never matches a ts range
-    * (SQL comparison semantics). The per-chunk text CRC lineage check
-    * only runs when `text` is decoded (checking it would otherwise
-    * force reading the text blocks — the cost the projection exists to
-    * avoid). */
-  def runProjected(spark: SparkSession, outDir: String, columns: Seq[String],
-                   urlRange: Option[(String, String)] = None,
-                   tsRangeMicros: Option[(Long, Long)] = None): DataFrame = {
-    require(columns.nonEmpty && columns.forall(ColumnNames.contains),
-      s"columns must be among $ColumnNames, got $columns")
-    require(columns.distinct == columns,
-      s"duplicate columns requested: $columns — parquet rejects duplicate field names")
-    // row-level range filtering needs the decoded url / warc_ts; add
-    // them internally
-    val needUrl = urlRange.isDefined && !columns.contains("url")
-    val needTs = tsRangeMicros.isDefined && !columns.contains("warc_ts")
-    val decodeCols =
-      (if (needTs) Seq("warc_ts") else Seq.empty) ++
-        (if (needUrl) Seq("url") else Seq.empty) ++ columns
-
-    var chunks = chunkScan(spark, outDir)
-    urlRange.foreach { case (lo, hi) =>
-      chunks = chunks.filter(col("urlMax") >= lo && col("urlMin") <= hi)
-    }
-    tsRangeMicros.foreach { case (lo, hi) =>
-      // symmetric null guard: tsMax-null-with-tsMin-set never comes from
-      // the writer (both-or-neither), but a hand-repaired/corrupt
-      // metadata row must degrade to KEPT (exact row filter settles it),
-      // not to a NULL predicate silently dropping the chunk's rows
-      chunks = chunks.filter(col("tsMin").isNull || col("tsMax").isNull ||
-        (col("tsMax") >= lo && col("tsMin") <= hi))
-    }
-    val narrow = chunks.select(
-      (col("rows") +: col("pid") +: col("blockIdx") +: col("textCrc32") +:
-        decodeCols.map(c => col(s"$c.block").as(s"${c}_block"))): _*)
-
-    val outSchema = StructType(columns.map {
-      case "url"     => StructField("url", StringType)
-      case "warc_ts" => StructField("warc_ts", TimestampType)
-      case "html"    => StructField("html", BinaryType)
-      case "text"    => StructField("text", StringType)
-      case "lang"    => StructField("lang", StringType)
-    })
-    val metaWidth = 4 // rows, pid, blockIdx, textCrc32
-    val range = urlRange
-    val tsRange = tsRangeMicros
-    val rows = narrow.mapPartitions { it =>
-      it.flatMap { r =>
-        // named check before narrowing: a corrupt rows value past
-        // Int.MaxValue would wrap and decode the chunk as ZERO rows —
-        // silent truncation
-        val nL = r.getLong(0)
-        require(nL >= 0L && nL <= Int.MaxValue,
-          s"chunk pid=${r.getInt(1)} blockIdx=${r.getInt(2)} claims $nL rows — corrupt metadata")
-        val n = nL.toInt
-        var urlView: ColumnCodec.BytesView = null
-        var tsMicrosArr: Array[Long] = null
-        var tsNullsArr: Array[Boolean] = null
-        val decoded: Map[String, Int => Any] = decodeCols.zipWithIndex.map { case (c, i) =>
-          val block = r.getAs[Array[Byte]](metaWidth + i)
-          require(block != null,
-            s"chunk pid=${r.getInt(1)} blockIdx=${r.getInt(2)} has no '$c' column " +
-              "block — written by a pre-columnar-layout encoder? Re-encode the table.")
-          c -> (c match {
-            case "warc_ts" =>
-              val (micros, nulls) = ColumnCodec.decodeLongs(block)
-              tsMicrosArr = micros
-              tsNullsArr = nulls
-              (j: Int) => if (nulls != null && nulls(j)) null else microsToTs(micros(j))
-            case "html" =>
-              val v = ColumnCodec.decodeBytesView(block)
-              (j: Int) => v.copyAt(j)
-            case "text" =>
-              val v = ColumnCodec.decodeBytesView(block)
-              requireTextCrc(v, r.getLong(3), r.getInt(1), r.getInt(2))
-              (j: Int) => v.stringAt(j)
-            case _ =>
-              val v = ColumnCodec.decodeBytesView(block)
-              if (c == "url") urlView = v
-              (j: Int) => v.stringAt(j)
-          })
-        }.toMap
-        val urlKeep: Int => Boolean = range match {
-          case Some((lo, hi)) =>
-            // shared UTF-8 byte-order semantics — see [[urlRangeKeep]];
-            // the view compares payload ranges in place, no String
-            // round-trip
-            urlRangeKeep(urlView, Array(lo.getBytes(UTF_8)), Array(hi.getBytes(UTF_8)))
-          case None => null
-        }
-        val tsKeep: Int => Boolean = tsRange match {
-          case Some((lo, hi)) =>
-            tsRangeKeep(tsMicrosArr, tsNullsArr, Array(lo), Array(hi))
-          case None => null
-        }
-        val keep: Int => Boolean =
-          j => (urlKeep == null || urlKeep(j)) && (tsKeep == null || tsKeep(j))
-        // hoist the per-column getters out of the row loop: a Map lookup
-        // + Seq allocation per CELL is pure overhead in the projection
-        // hot path; one pre-sized array fill per row remains
-        val getters = columns.map(decoded).toArray
-        Iterator.range(0, n).filter(keep).map { j =>
-          val vals = new Array[Any](getters.length)
-          var c = 0
-          while (c < getters.length) { vals(c) = getters(c)(j); c += 1 }
-          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
-        }
-      }
-    }(Encoders.row(outSchema))
-    rows
   }
 
   private def microsToTs(micros: Long): java.sql.Timestamp =

@@ -562,7 +562,10 @@ object EncodeJob {
 
   /** Explicit-schema METADATA scan of the chunk table: only the columns a
     * caller selects are ever read (each encoded column is a top-level
-    * struct leaf), so payload bytes stay on disk. */
+    * struct leaf), so payload bytes stay on disk. Also the scan of
+    * [[DecodeJob.run]]: the pinned schema reads an empty chunks
+    * directory (an encode of an empty input) as zero rows instead of
+    * failing parquet schema inference. */
   private[graft] def chunkMetaScan(spark: SparkSession, outDir: String) =
     spark.read
       .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
@@ -583,11 +586,11 @@ object EncodeJob {
 
   /** Distributed manifest derivation: one manifest row per
     * (pid, attemptId), aggregated from chunk metadata columns with no
-    * driver materialization. url min/max merge over the UTF-8 BYTES
-    * (BinaryType comparison is unsigned lexicographic) — the same
-    * ordering the kernel sort, the accumulator merge and the decode range
-    * filter use; a String min/max (UTF-16 code units) would disagree on
-    * supplementary-plane characters. */
+    * driver materialization. Spark's StringType min/max compares UTF-8
+    * BYTES (UTF8String order) — the same ordering the kernel sort, the
+    * accumulator merge and the decode range filter use; Java String
+    * order (UTF-16 code units) would disagree on supplementary-plane
+    * characters. */
   private def manifestRowsFromChunks(
       spark: SparkSession,
       chunkMeta: org.apache.spark.sql.DataFrame,
@@ -599,8 +602,8 @@ object EncodeJob {
       .agg(
         count(lit(1)).as("blocks"),
         sum($"rows").as("rows"),
-        min(encode($"urlMin", "UTF-8")).as("urlMinB"),
-        max(encode($"urlMax", "UTF-8")).as("urlMaxB"),
+        min($"urlMin").as("urlMin"),
+        max($"urlMax").as("urlMax"),
         sum($"rawBytes").as("rawBytes"),
         sum($"encBytes").as("encBytes"),
         sum($"flBaselineBytes").as("flBaselineBytes"),
@@ -610,11 +613,8 @@ object EncodeJob {
           lit("url"), codecsOf("url"), lit("warc_ts"), codecsOf("warc_ts"),
           lit("html"), codecsOf("html"), lit("text"), codecsOf("text"),
           lit("lang"), codecsOf("lang")).as("codecs"))
-      .select($"pid", $"blocks", $"rows",
-        decode($"urlMinB", "UTF-8").as("urlMin"),
-        decode($"urlMaxB", "UTF-8").as("urlMax"),
-        $"rawBytes", $"encBytes", $"flBaselineBytes", $"encodeNanos",
-        $"textCrc32Xor", $"codecs", $"attemptId",
+      .select($"pid", $"blocks", $"rows", $"urlMin", $"urlMax",
+        $"rawBytes", $"encBytes", $"flBaselineBytes", $"encodeNanos", $"textCrc32Xor", $"codecs", $"attemptId",
         lit(finishedAt).as("finishedAtEpochMs"))
   }
 

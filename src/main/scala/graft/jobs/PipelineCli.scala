@@ -1,8 +1,9 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
 
-import graft.sources.{TableIO, WebtextGen}
+import graft.sources.{GraftDataSource, TableIO, WebtextGen}
 
 /** spark-submit entrypoint for the encode/decode/verify pipeline
   * (north_rule: "run via spark-submit on a multi-executor cluster").
@@ -65,6 +66,17 @@ object PipelineCli {
     s
   }
 
+  /** The `decode` column list: comma-separated Page column names, none
+    * repeated (parquet rejects duplicate field names on write). */
+  private[graft] def decodeColumns(arg: String): Seq[String] = {
+    val known = GraftDataSource.PageSchema.fieldNames.toSeq
+    val columns = arg.split(',').toSeq
+    require(columns.forall(known.contains), s"columns must be among $known, got $columns")
+    require(columns.distinct == columns,
+      s"duplicate columns requested: $columns — parquet rejects duplicate field names")
+    columns
+  }
+
   def main(args: Array[String]): Unit = {
     args.toList match {
       case "gen" :: out :: n :: rest =>
@@ -119,27 +131,29 @@ object PipelineCli {
         val spark = session("graft-decode")
         // optional: comma-separated column projection, an inclusive url
         // range, and/or `ts <lo> <hi>` (epoch micros or ISO-8601
-        // instants) — columnar decode reads only the requested blocks
-        // and prunes chunks by (urlMin, urlMax) / (tsMin, tsMax) before
-        // decoding
-        def tsMicros(s: String): Long = s.toLongOption.getOrElse {
+        // instants) — the DSv2 scan reads only the requested blocks and
+        // consumes both ranges, pruning by (urlMin, urlMax) / (tsMin,
+        // tsMax) before decoding
+        def ts(s: String) = timestamp_micros(lit(s.toLongOption.getOrElse {
           val i = java.time.Instant.parse(s)
           Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
             (i.getNano / 1000).toLong)
-        }
-        val df = rest match {
-          case Nil => DecodeJob.run(spark, outDir).toDF()
-          case cols :: Nil => DecodeJob.runProjected(spark, outDir, cols.split(',').toSeq)
-          case cols :: "ts" :: lo :: hi :: Nil =>
-            DecodeJob.runProjected(spark, outDir, cols.split(',').toSeq,
-              None, Some((tsMicros(lo), tsMicros(hi))))
-          case cols :: lo :: hi :: Nil =>
-            DecodeJob.runProjected(spark, outDir, cols.split(',').toSeq, Some((lo, hi)))
+        }))
+        val (cols, urlRange, tsRange) = rest match {
+          case Nil => (None, None, None)
+          case cols :: Nil => (Some(cols), None, None)
+          case cols :: "ts" :: lo :: hi :: Nil => (Some(cols), None, Some((lo, hi)))
+          case cols :: lo :: hi :: Nil => (Some(cols), Some((lo, hi)), None)
           case cols :: lo :: hi :: "ts" :: tlo :: thi :: Nil =>
-            DecodeJob.runProjected(spark, outDir, cols.split(',').toSeq,
-              Some((lo, hi)), Some((tsMicros(tlo), tsMicros(thi))))
+            (Some(cols), Some((lo, hi)), Some((tlo, thi)))
           case other => sys.error(s"decode: bad args $other")
         }
+        var df = spark.read.format("graft").load(outDir)
+        urlRange.foreach { case (lo, hi) => df = df.filter(col("url") >= lo && col("url") <= hi) }
+        tsRange.foreach { case (lo, hi) =>
+          df = df.filter(col("warc_ts") >= ts(lo) && col("warc_ts") <= ts(hi))
+        }
+        cols.foreach(c => df = df.select(decodeColumns(c).map(col): _*))
         TableIO.write(df, out, org.apache.spark.sql.SaveMode.Overwrite)
         println(s"""{"op":"decode","out":${graft.JsonEscape.quote(out)},"cols":${graft.JsonEscape.quote(rest.headOption.getOrElse("*"))}}""")
         spark.stop()

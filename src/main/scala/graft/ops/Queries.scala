@@ -1720,15 +1720,15 @@ object Queries {
 
   /** The ENGINE ITSELF under the driver's oracle: documents mapped to the
     * Page shape, encoded through the full pipeline (bounds sample, pid
-    * shuffle, codec selector, chunk+manifest write), then decoded via the
-    * PROJECTED columnar path (url/text/lang blocks only — html blocks are
-    * never read). The oracle recomputes url/text-md5/lang straight from
-    * the source table, so the hash compare asserts byte-identical
-    * round-trip of every row through encode->disk->projected decode —
-    * the north_rule invariant, checked by DuckDB instead of our own
-    * tests. */
+    * shuffle, codec selector, chunk+manifest write) by `EncodeJob.run`,
+    * then read back through the DSv2 scan with a url/text/lang projection
+    * (html and warc_ts blocks are never read). The oracle recomputes
+    * url/text-md5/lang straight from the source table, so the hash
+    * compare asserts byte-identical round-trip of every row through
+    * encode->disk->projected decode — the north_rule invariant, checked
+    * by DuckDB instead of our own tests. */
   def qEngineRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import graft.jobs.{DecodeJob, EncodeJob}
+    import graft.jobs.EncodeJob
     val pages = enginePages(spark, dir)
     // deterministic scratch dir per (process, session, input dir) with
     // stale-pid sweep + shutdown-hook cleanup — see [[processScratch]]
@@ -1737,17 +1737,17 @@ object Queries {
     // end-of-run whole-manifest totals job (the oracle checks the rows)
     EncodeJob.run(spark, pages, out,
       EncodeJob.Config(numPartitions = 8, wholeTableStats = false))
-    DecodeJob.runProjected(spark, out, Seq("url", "text", "lang"))
+    spark.read.format("graft").load(out)
       .select($"url", md5($"text".cast("binary")).as("text_md5"), $"lang")
   }
 
-  /** Range-pruned engine decode under the oracle: a PROJECTED decode of
-    * the SHARED encoded scratch ([[dsv2Scratch]] — encode paid once per
+  /** Range-pruned decode under the oracle: a url/lang DSv2 read of the
+    * SHARED encoded scratch ([[dsv2Scratch]] — encode paid once per
     * session+input, exactly like its ts-range twin [[qEngineTsRange]])
-    * restricted to an inclusive url range — chunk-level (urlMin, urlMax)
-    * pruning plus exact row-level UTF-8 range filtering, the engine's
-    * partition-pruning analog. This query asserts the RANGE-PRUNED SCAN,
-    * not the encode (the honest per-invocation encode gates remain
+    * restricted to an inclusive url range — file, row-group and chunk
+    * (urlMin, urlMax) pruning plus exact row-level UTF-8 range filtering,
+    * the engine's partition-pruning analog. This query asserts the
+    * RANGE-PRUNED SCAN, not the encode (the honest per-invocation encode gates remain
     * [[qEngineRoundtrip]] and [[qDsv2Write]]), so re-paying a full encode
     * per call multiplied the suite's largest fixed cost without widening
     * coverage. The %09d url embeds doc_id order-preservingly, so the
@@ -1756,7 +1756,9 @@ object Queries {
     val out = dsv2Scratch(spark, dir)
     val lo = "https://doc.example/%09d".format(100L)
     val hi = "https://doc.example/%09d".format(299L)
-    graft.jobs.DecodeJob.runProjected(spark, out, Seq("url", "lang"), Some((lo, hi)))
+    spark.read.format("graft").load(out)
+      .filter($"url" >= lo && $"url" <= hi)
+      .select($"url", $"lang")
   }
 
   private val dsv2Memo =
@@ -1764,8 +1766,8 @@ object Queries {
 
   /** Encode-once scratch shared by the READ-path queries over the
     * encoded table (q_dsv2_read / q_dsv2_ts_range / q_dsv2_count /
-    * q_dsv2_minmax through the connector, q_engine_ts_range through
-    * DecodeJob): those queries assert the SCAN — pushdowns, pruning,
+    * q_dsv2_minmax / q_engine_rt_range / q_engine_ts_range, all through
+    * the connector): those queries assert the SCAN — pushdowns, pruning,
     * decode — so re-paying a full encode per query multiplied the
     * suite's largest fixed cost without widening coverage. The honest full-pipeline encode gates remain
     * [[qEngineRoundtrip]] (engine surface) and [[qDsv2Write]] (SQL
@@ -1839,18 +1841,17 @@ object Queries {
     spark.read.format("graft").load(out).agg(count(lit(1)).as("n_pages"))
   }
 
-  /** Time-range decode through the ENGINE surface (DecodeJob): the
-    * twin of [[qDsv2TsRange]] on the other front door — chunk-level
-    * (tsMin, tsMax) pruning plus exact decoded-micros row filtering in
-    * `runProjected`, over the shared encoded scratch. Both doors must
-    * answer the same ts-range question identically; the oracle holds
-    * each to the source-table ground truth. */
+  /** Time-range decode with the bounds given as epoch micros, the form
+    * the decode CLI takes: the twin of [[qDsv2TsRange]] (whose bounds are
+    * whole seconds) over the same scan and the shared encoded scratch —
+    * (tsMin, tsMax) pruning plus exact decoded-micros row filtering. The
+    * oracle holds each to the source-table ground truth. */
   def qEngineTsRange(spark: SparkSession, dir: String): DataFrame = {
     val out = dsv2Scratch(spark, dir)
     val lo = (1700000000L + 200L) * 1000000L
     val hi = (1700000000L + 459L) * 1000000L
-    graft.jobs.DecodeJob.runProjected(spark, out, Seq("url", "warc_ts", "lang"),
-        None, Some((lo, hi)))
+    spark.read.format("graft").load(out)
+      .filter($"warc_ts" >= timestamp_micros(lit(lo)) && $"warc_ts" <= timestamp_micros(lit(hi)))
       .select($"url", unix_micros($"warc_ts").as("ts_us"), $"lang")
   }
 
@@ -1878,15 +1879,15 @@ object Queries {
   /** The DSv2 WRITE path under the oracle: the corpus written through
     * `df.write.format("graft")` (the V1Write bridge running the full
     * resumable EncodeJob — bounds sample, pid shuffle, codec selection,
-    * chunk+manifest commit), then read back via the projected columnar
-    * decode and hash-matched against the source. The pure-SQL-surface
+    * chunk+manifest commit), then read back through the DSv2 scan with a
+    * url/text/lang projection and hash-matched against the source. The pure-SQL-surface
     * twin of [[qEngineRoundtrip]]; deliberately pays its own full
     * encode per invocation — it IS the write gate. */
   def qDsv2Write(spark: SparkSession, dir: String): DataFrame = {
     val out = processScratch("graft-dsv2-wr", dir, sessionTok(spark))
     enginePages(spark, dir).toDF()
       .write.format("graft").option("partitions", "8").mode("overwrite").save(out)
-    graft.jobs.DecodeJob.runProjected(spark, out, Seq("url", "text", "lang"))
+    spark.read.format("graft").load(out)
       .select($"url", md5($"text".cast("binary")).as("text_md5"), $"lang")
   }
 

@@ -29,7 +29,7 @@ import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, InsertableRelation, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, InsertableRelation, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -46,9 +46,10 @@ import graft.jobs.FlFileJob.SerializableConf
   * {{{ spark.read.format("graft").load(encodeDir) }}}
   *
   * presents the decoded Page table (url, warc_ts, html, text, lang) as a
-  * first-class Catalyst relation. The connector implements the two
-  * pushdowns the chunk layout was designed for (see EncodedChunk's
-  * scaladoc and DecodeJob.runProjected):
+  * first-class Catalyst relation — the engine's one projected and
+  * url/warc_ts-range decode ([[graft.jobs.DecodeJob]] is the typed full
+  * decode). The connector implements the pushdowns the chunk layout was
+  * designed for (see EncodedChunk's scaladoc):
   *
   *  - '''Column pruning''' ([[SupportsPushDownRequiredColumns]]): only
   *    the requested columns' `block` leaves are read from the chunk
@@ -198,6 +199,36 @@ object GraftDataSource {
     else Some(RowGroupFilter.filterRowGroups(
       FilterCompat.get(preds.reduce(FilterApi.and(_, _))), groups, schema))
   }
+
+  /** Exact row-level url-range keep filter over a decoded url view, in
+    * UTF-8 BYTE order on the raw payload — the same total order the
+    * encoder sorted by, the chunk-level (urlMin, urlMax) prune uses,
+    * and Spark's own UTF8String comparison defines (Java String order,
+    * UTF-16 code units, disagrees for supplementary characters vs
+    * U+E000..U+FFFF). */
+  private[sources] def urlRangeKeep(v: ColumnCodec.BytesView,
+      loB: Array[Array[Byte]], hiB: Array[Array[Byte]],
+      loStrict: Array[Array[Byte]], hiStrict: Array[Array[Byte]]): Int => Boolean =
+    j => !v.isNull(j) && {
+      val s = v.start(j)
+      val e = s + v.len(j)
+      loB.forall(lo =>
+        java.util.Arrays.compareUnsigned(v.payload, s, e, lo, 0, lo.length) >= 0) &&
+        hiB.forall(hi =>
+          java.util.Arrays.compareUnsigned(v.payload, s, e, hi, 0, hi.length) <= 0) &&
+        loStrict.forall(lo =>
+          java.util.Arrays.compareUnsigned(v.payload, s, e, lo, 0, lo.length) > 0) &&
+        hiStrict.forall(hi =>
+          java.util.Arrays.compareUnsigned(v.payload, s, e, hi, 0, hi.length) < 0)
+    }
+
+  /** Exact row-level warc_ts-range keep filter over DECODED micros: a
+    * null ts never matches (SQL comparison semantics), inclusive bound
+    * lists. */
+  private[sources] def tsRangeKeep(micros: Array[Long], nulls: Array[Boolean],
+      loB: Array[Long], hiB: Array[Long]): Int => Boolean =
+    j => (nulls == null || !nulls(j)) &&
+      loB.forall(micros(j) >= _) && hiB.forall(micros(j) <= _)
 
   /** The statistics columns [[keptRowGroups]] reads; a cached footer
     * keeps only these column chunks of each row group. */
@@ -515,8 +546,17 @@ final class GraftScanBuilder(path: String) extends ScanBuilder
       case _ => false
     }
     val (acc, residual) = filters.partition(consume)
-    pushed = acc
-    residual
+    // the exact row filters never keep a null, so a consumed bound also
+    // answers the IsNotNull Spark infers for its column — left residual,
+    // that check would force the column into a projection without it
+    val (implied, rest) = residual.partition {
+      case IsNotNull("url") =>
+        los.nonEmpty || his.nonEmpty || losStrict.nonEmpty || hisStrict.nonEmpty
+      case IsNotNull("warc_ts") => tsLos.nonEmpty || tsHis.nonEmpty
+      case _ => false
+    }
+    pushed = acc ++ implied
+    rest
   }
   override def pushedFilters(): Array[Filter] = pushed
 
@@ -966,7 +1006,16 @@ final class GraftPartitionReader(file: String, conf: Configuration,
   private def decodeChunkRow(g: Group): Iterator[InternalRow] = {
     val pid = g.getInteger("pid", 0)
     val blockIdx = g.getInteger("blockIdx", 0)
-    val n = g.getLong("rows", 0).toInt
+    // named checks on the metadata row count: past Int.MaxValue it would
+    // wrap, and any value other than the blocks' own count would read the
+    // chunk short or past its end — both silent wrong answers
+    val rows = g.getLong("rows", 0)
+    require(rows >= 0L && rows <= Int.MaxValue,
+      s"chunk pid=$pid blockIdx=$blockIdx claims $rows rows — corrupt metadata")
+    val n = rows.toInt
+    def requireRows(name: String, count: Int): Unit =
+      require(count == n, s"chunk pid=$pid blockIdx=$blockIdx: '$name' block holds " +
+        s"$count values, metadata claims $n rows — corrupt metadata")
     if (hasUrlBounds) {
       // chunk-level pruning on (urlMin, urlMax) BEFORE any block decode
       if (!bounds.chunkUrlOverlaps(
@@ -986,6 +1035,7 @@ final class GraftPartitionReader(file: String, conf: Configuration,
       // never decode one block twice
       if (name == "url" && urlView != null) return urlView
       val v = ColumnCodec.decodeBytesView(blockOf(g, pid, blockIdx, name))
+      requireRows(name, v.n)
       if (name == "url") urlView = v
       if (name == "text")
         graft.jobs.DecodeJob.requireTextCrc(v, g.getLong("textCrc32", 0), pid, blockIdx)
@@ -995,8 +1045,10 @@ final class GraftPartitionReader(file: String, conf: Configuration,
     // ts-range filter, or both
     var tsData: (Array[Long], Array[Boolean]) = null
     def tsDecoded(): (Array[Long], Array[Boolean]) = {
-      if (tsData == null)
+      if (tsData == null) {
         tsData = ColumnCodec.decodeLongs(blockOf(g, pid, blockIdx, "warc_ts"))
+        requireRows("warc_ts", tsData._1.length)
+      }
       tsData
     }
     // FILTER FIRST, decode after: the keep set needs only the url and/or
@@ -1007,21 +1059,18 @@ final class GraftPartitionReader(file: String, conf: Configuration,
     val matches: Array[Int] =
       if (!hasUrlBounds && !hasTsBounds) null // all rows
       else {
-        // shared UTF-8 byte-order range semantics — one definition with
-        // DecodeJob.runProjected (see DecodeJob.urlRangeKeep)
+        // UTF-8 byte-order range semantics (see urlRangeKeep)
         val urlKeep: Int => Boolean =
           if (!hasUrlBounds) null
-          else graft.jobs.DecodeJob.urlRangeKeep(bytesView("url"),
+          else GraftDataSource.urlRangeKeep(bytesView("url"),
             bounds.urlLo, bounds.urlHi, bounds.urlLoStrict, bounds.urlHiStrict)
         // exact ts filter on the DECODED micros: null ts never matches a
-        // range bound (SQL comparison semantics)
-        // exact ts filter on the DECODED micros — shared semantics with
-        // the engine decode (see DecodeJob.tsRangeKeep)
+        // range bound (SQL comparison semantics; see tsRangeKeep)
         val tsKeep: Int => Boolean =
           if (!hasTsBounds) null
           else {
             val (micros, nulls) = tsDecoded()
-            graft.jobs.DecodeJob.tsRangeKeep(micros, nulls, bounds.tsLo, bounds.tsHi)
+            GraftDataSource.tsRangeKeep(micros, nulls, bounds.tsLo, bounds.tsHi)
           }
         val b = Array.newBuilder[Int]
         var j = 0

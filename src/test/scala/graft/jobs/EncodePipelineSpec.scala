@@ -73,7 +73,7 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     assert(res.rows == 0L && res.encBytes == 0L && res.pidsEncoded == 0L)
     // and the empty output decodes as zero rows, full and projected
     assert(DecodeJob.run(spark, outDir).count() == 0L)
-    assert(DecodeJob.runProjected(spark, outDir, Seq("url")).count() == 0L)
+    assert(spark.read.format("graft").load(outDir).select("url").collect().isEmpty)
   }
 
   test("resume: interrupted run skips completed partitions, identical result") {
@@ -263,7 +263,8 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     assert(m._1 == "https://x/aaa")
     assert(m._2 == uSupp, s"manifest urlMax '${m._2}' is the UTF-16 max, not the UTF-8 max")
     // and a url-range decode over just the supplementary url returns it
-    val hit = DecodeJob.runProjected(spark, outDir, Seq("url"), Some((uSupp, uSupp)))
+    val hit = spark.read.format("graft").load(outDir)
+      .filter($"url" >= uSupp && $"url" <= uSupp).select($"url")
       .as[String].collect().toSeq
     assert(hit == Seq(uSupp))
   }
@@ -400,7 +401,7 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     EncodeJob.run(spark, source, outDir, EncodeJob.Config(numPartitions = 4))
     val perCol = spark.read.parquet(EncodeJob.chunksDir(outDir))
       .select(explode(array(
-        DecodeJob.ColumnNames.map(c => col(c)): _*)).as("c"))
+        graft.sources.GraftDataSource.PageSchema.fieldNames.toSeq.map(col): _*)).as("c"))
       .select($"c.name", $"c.codec", $"c.rawBytes", $"c.encBytes")
       .groupBy($"name").agg(
         concat_ws(",", sort_array(collect_set($"codec"))).as("codecs"),

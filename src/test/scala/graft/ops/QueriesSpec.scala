@@ -364,6 +364,34 @@ class QueriesSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("engine round trips and range decodes return the oracle's rows") {
+    import spark.implicits._
+    val dir = tmpDir("graft-queries-engine")
+    // enginePages maps doc_id to url %09d and warc_ts 1700000000 + doc_id
+    // seconds; one empty text and a few null langs ride along
+    val docs = (0L until 500L).map { i =>
+      (i, if (i == 97L) "" else s"document $i body " + "word " * (i % 13).toInt,
+        if (i % 50 == 7) null else Seq("en", "de", "fr")((i % 3).toInt), s"src${i % 5}", 10L)
+    }
+    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    def url(i: Long) = "https://doc.example/%09d".format(i)
+    def md5Hex(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
+    def between(lo: Long, hi: Long) = docs.filter(d => d._1 >= lo && d._1 <= hi)
+
+    val full = docs.map(d => (url(d._1), md5Hex(d._2), d._3))
+    for ((name, df) <- Seq("q_engine_roundtrip" -> Queries.qEngineRoundtrip(spark, dir),
+                            "q_dsv2_write" -> Queries.qDsv2Write(spark, dir)))
+      assert(df.as[(String, String, String)].collect().sortBy(_._1).toSeq == full, name)
+    // the doc_id BETWEEN windows the oracle encodes
+    assert(Queries.qEngineRtRange(spark, dir).as[(String, String)].collect().sortBy(_._1).toSeq ==
+      between(100L, 299L).map(d => (url(d._1), d._3)))
+    assert(Queries.qEngineTsRange(spark, dir).as[(String, Long, String)].collect()
+      .sortBy(_._1).toSeq ==
+      between(200L, 459L).map(d => (url(d._1), (1700000000L + d._1) * 1000000L, d._3)))
+  }
+
   test("processScratch sweeps dead-JVM dirs, keeps live ones, wipes its own") {
     val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     val prefix = "graft-scrtest"

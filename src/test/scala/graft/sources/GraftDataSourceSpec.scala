@@ -64,9 +64,10 @@ final class CountingIn(in: FSDataInputStream) extends java.io.InputStream
   override def close(): Unit = in.close()
 }
 
-/** The DataSource V2 read surface: `spark.read.format("graft")` must
-  * equal the DecodeJob paths bit-for-bit, prune columns down to the
-  * parquet block leaves, and consume url-range predicates exactly. */
+/** The DataSource V2 read surface — the engine's one projected and
+  * range decode: `spark.read.format("graft")` must equal DecodeJob.run
+  * bit-for-bit, prune columns down to the parquet block leaves, and
+  * consume url and warc_ts range predicates exactly. */
 class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlanHelper {
 
   private lazy val dir = {
@@ -93,6 +94,10 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
     new java.io.File(s"$table/chunks").listFiles()
       .count(f => f.isFile && f.length > 0 && !f.getName.startsWith("_") &&
         !f.getName.startsWith("."))
+
+  /** The messages of `t` and its causes, outermost first. */
+  private def chain(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(e => String.valueOf(e.getMessage) +: chain(e.getCause))
 
   /** Runs `pred` as a graft read of `table` and over DecodeJob's decode of
     * it (which never goes through GraftScan, so nothing is pruned), asserts
@@ -198,6 +203,54 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
     assert(got == want, s"range read mismatch: got ${got.size}, want ${want.size}")
   }
 
+  test("url and ts ranges together on a projection holding neither column") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val source = WebtextGen.pages(spark, 800L, partitions = 4).toDF()
+    val urls = source.select($"url").as[String].collect().sorted
+    val micros = source.select(unix_micros($"warc_ts")).as[Long].collect().sorted
+    val pred = $"url" >= urls(100) && $"url" <= urls(700) &&
+      $"warc_ts" >= timestamp_micros(lit(micros(150))) &&
+      $"warc_ts" <= timestamp_micros(lit(micros(650)))
+    val df = read().filter(pred).select($"lang")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ReadColumns=[lang]") && plan.contains(s"url >= '${urls(100)}'") &&
+      plan.contains(s"warc_ts_micros <= ${micros(650)}"),
+      "bounds not consumed under a lang-only projection:\n" + plan)
+    val got = df.as[String].collect().sorted.toSeq
+    val want = source.filter(pred).select($"lang").as[String].collect().sorted.toSeq
+    assert(got == want, s"url+ts range mismatch: got ${got.size}, want ${want.size}")
+    assert(got.nonEmpty && got.size < 601, s"degenerate intersection: ${got.size}")
+  }
+
+  test("decode CLI rejects duplicate or unknown projection columns") {
+    import graft.jobs.PipelineCli.decodeColumns
+    assert(decodeColumns("lang,url") == Seq("lang", "url"))
+    // duplicates would otherwise surface later as parquet's confusing
+    // 'Found duplicate column(s)' on write
+    val dup = intercept[IllegalArgumentException](decodeColumns("url,url"))
+    assert(dup.getMessage.contains("duplicate"))
+    val unknown = intercept[IllegalArgumentException](decodeColumns("nope"))
+    assert(unknown.getMessage.contains("columns must be among"))
+  }
+
+  test("a corrupt chunk row count fails a projected read with a named error") {
+    import org.apache.spark.sql.functions._
+    // unchecked, a count past Int.MaxValue wraps negative and reads zero
+    // rows, and one short of the blocks' count drops each chunk's last row
+    for ((what, rows) <- Seq("2^31" -> lit(1L << 31), "rows - 1" -> (col("rows") - 1L))) {
+      val bad = tmpDir("graft-dsv2-rows")
+      graft.ScalingLevel.rmrf(bad)
+      spark.read.parquet(s"$dir/chunks").withColumn("rows", rows)
+        .write.mode("overwrite").parquet(s"$bad/chunks")
+      val err = intercept[Exception] {
+        spark.read.format("graft").load(bad).select("url").collect()
+      }
+      assert(chain(err).exists(m => m.contains("chunk pid=") && m.contains("blockIdx=") &&
+        m.contains("corrupt metadata")), s"$what: ${chain(err)}")
+    }
+  }
+
   test("STRICT bounds (>/<) are consumed on url and warc_ts, exactly") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -288,9 +341,7 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
         org.apache.spark.sql.functions.lit(null).cast("string"))
         .write.format("graft").mode("overwrite").save(tmpDir("graft-dsv2-nullurl"))
     }
-    def chain(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => e.getMessage +: chain(e.getCause))
-    assert(chain(nullErr).exists(m => m != null && m.contains("must be non-null")),
+    assert(chain(nullErr).exists(_.contains("must be non-null")),
       s"expected the named non-null url error, got: ${chain(nullErr)}")
 
     // overwrite truncates and re-encodes the new input
