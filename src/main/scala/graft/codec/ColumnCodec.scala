@@ -473,10 +473,10 @@ object ColumnCodec {
 
   /** Zero-copy decoded view of a bytes column: row i is
     * `payload[starts(i), starts(i)+lens(i))` (or null). Exists because the
-    * decode hot path (DecodeJob) mostly turns values straight into Strings
-    * or CRC updates — materializing an Array[Byte] per row first
-    * (decodeBytes) is a copy per value that the consumer immediately
-    * throws away. For dict-encoded columns the win is bigger still: rows
+    * decode hot path (GraftPartitionReader) turns values straight into
+    * UTF8Strings or CRC updates — materializing an Array[Byte] per row
+    * first (decodeBytes) is a copy per value that the consumer
+    * immediately throws away. For dict-encoded columns the win is bigger still: rows
     * point into the SHARED dictionary buffer, so a column of 64k rows over
     * 5 distinct values decodes with zero payload expansion. */
   final class BytesView(
@@ -488,9 +488,6 @@ object ColumnCodec {
     @inline def isNull(i: Int): Boolean = nulls != null && nulls(i)
     @inline def start(i: Int): Int = starts(i)
     @inline def len(i: Int): Int = lens(i)
-    def stringAt(i: Int): String =
-      if (isNull(i)) null
-      else new String(payload, starts(i), lens(i), java.nio.charset.StandardCharsets.UTF_8)
     def copyAt(i: Int): Array[Byte] =
       if (isNull(i)) null
       else java.util.Arrays.copyOfRange(payload, starts(i), starts(i) + lens(i))

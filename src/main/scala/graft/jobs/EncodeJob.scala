@@ -562,10 +562,9 @@ object EncodeJob {
 
   /** Explicit-schema METADATA scan of the chunk table: only the columns a
     * caller selects are ever read (each encoded column is a top-level
-    * struct leaf), so payload bytes stay on disk. Also the scan of
-    * [[DecodeJob.run]]: the pinned schema reads an empty chunks
-    * directory (an encode of an empty input) as zero rows instead of
-    * failing parquet schema inference. */
+    * struct leaf), so payload bytes stay on disk. The pinned schema
+    * reads an empty chunks directory (an encode of an empty input) as
+    * zero rows instead of failing parquet schema inference. */
   private[graft] def chunkMetaScan(spark: SparkSession, outDir: String) =
     spark.read
       .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
@@ -857,7 +856,7 @@ object EncodeJob {
     }
 
     // null texts are SKIPPED — the decode-side lineage check
-    // (DecodeJob.requireTextCrc) skips null rows the same way
+    // (GraftDataSource.requireTextCrc) skips null rows the same way
     val crc = new CRC32()
     texts.foreach(t => if (t != null) crc.update(t))
 

@@ -46,9 +46,10 @@ import graft.jobs.FlFileJob.SerializableConf
   * {{{ spark.read.format("graft").load(encodeDir) }}}
   *
   * presents the decoded Page table (url, warc_ts, html, text, lang) as a
-  * first-class Catalyst relation — the engine's one projected and
-  * url/warc_ts-range decode ([[graft.jobs.DecodeJob]] is the typed full
-  * decode). The connector implements the pushdowns the chunk layout was
+  * first-class Catalyst relation — the engine's one decode kernel, for
+  * full, projected and url/warc_ts-range reads alike
+  * ([[graft.jobs.DecodeJob.run]] is this read typed as `Dataset[Page]`).
+  * The connector implements the pushdowns the chunk layout was
   * designed for (see EncodedChunk's scaladoc):
   *
   *  - '''Column pruning''' ([[SupportsPushDownRequiredColumns]]): only
@@ -169,6 +170,24 @@ object GraftDataSource {
     * exact row filtering on the decoded warc_ts block. */
   private[sources] def hasTsStats(schema: GroupType): Boolean =
     schema.containsField("tsMin") && schema.containsField("tsMax")
+
+  /** Decoded-text CRC lineage check: the decoded text column must
+    * reproduce the CRC the encoder recorded for this chunk — corruption
+    * fails fast, at the chunk that broke, instead of surfacing later as
+    * a verify-join mismatch. Null rows are skipped, as the encoder skips
+    * them. */
+  private[sources] def requireTextCrc(v: ColumnCodec.BytesView,
+                                      recorded: Long, pid: Int, blockIdx: Int): Unit = {
+    val crc = new java.util.zip.CRC32()
+    var k = 0
+    while (k < v.n) {
+      if (!v.isNull(k)) crc.update(v.payload, v.start(k), v.len(k))
+      k += 1
+    }
+    require(crc.getValue == recorded,
+      s"chunk pid=$pid blockIdx=$blockIdx: decoded text CRC ${crc.getValue} " +
+        s"!= recorded $recorded (corrupt block?)")
+  }
 
   /** The row groups of one chunk file whose (urlMin, urlMax) /
     * (tsMin, tsMax) STATISTICS can intersect `bounds`; None when no
@@ -667,9 +686,9 @@ final class GraftScan(path: String, required: StructType,
     // for a populated table — fail loudly instead
     val fmt = TableIO.format(SparkSession.active)
     require(fmt == "parquet",
-      s"graft DSv2 read supports the parquet chunk layout; " +
-        s"spark.graft.table.format=$fmt is configured — read this table " +
-        "through DecodeJob/TableIO instead")
+      s"graft decode supports only the parquet chunk layout; " +
+        s"spark.graft.table.format=$fmt is configured and no decode path " +
+        "reads that layout")
     val root = new HPath(path)
     val fs = root.getFileSystem(hconf)
     val all =
@@ -937,7 +956,7 @@ final class GraftPartitionReader(file: String, conf: Configuration,
       // dropped groups). A group's stats span the UNION of the chunk rows
       // it holds (pid-hash file assignment mixes ranges within a file),
       // so this prunes at row-group granularity; the per-chunk-row prune
-      // in decodeChunkRow then skips the decode of individual
+      // in decodeRecord then skips the decode of individual
       // non-matching chunks the surviving group still carries. Applied
       // AFTER open (not as a record filter at open time) so the predicate
       // is built against the columns this file's schema actually has.
@@ -984,7 +1003,7 @@ final class GraftPartitionReader(file: String, conf: Configuration,
       if (rowsLeftInGroup > 0L) {
         val g = recordReader.read()
         rowsLeftInGroup -= 1
-        rowIter = decodeChunkRow(g)
+        rowIter = decodeRecord(g)
       }
     }
     current = rowIter.next()
@@ -1003,7 +1022,8 @@ final class GraftPartitionReader(file: String, conf: Configuration,
     col.getBinary("block", 0).getBytes
   }
 
-  private def decodeChunkRow(g: Group): Iterator[InternalRow] = {
+  /** The rows of one chunk record (one row of the chunk table). */
+  private def decodeRecord(g: Group): Iterator[InternalRow] = {
     val pid = g.getInteger("pid", 0)
     val blockIdx = g.getInteger("blockIdx", 0)
     // named checks on the metadata row count: past Int.MaxValue it would
@@ -1038,7 +1058,7 @@ final class GraftPartitionReader(file: String, conf: Configuration,
       requireRows(name, v.n)
       if (name == "url") urlView = v
       if (name == "text")
-        graft.jobs.DecodeJob.requireTextCrc(v, g.getLong("textCrc32", 0), pid, blockIdx)
+        GraftDataSource.requireTextCrc(v, g.getLong("textCrc32", 0), pid, blockIdx)
       v
     }
     // warc_ts decodes ONCE whether it serves the projection, the exact

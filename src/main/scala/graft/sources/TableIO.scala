@@ -13,6 +13,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `spark.graft.table.format=iceberg` (plus the usual catalog conf)
   * switches every read/write site in one place; no job code changes.
   *
+  * The conf reaches no decode: every decode (DecodeJob.run, the CLI's
+  * `decode`, `spark.read.format("graft")`) is the DSv2 scan, which lists
+  * the parquet chunk layout itself and refuses any other configured
+  * format with a named error.
+  *
   * Documented exclusion: the crash-RECOVERY surfaces — attempt-marker
   * sidecars under `_attempts/`, the begin-only rollback's raw chunk-file
   * deletes, and the `_temporary` cleanup — assume a directory-backed

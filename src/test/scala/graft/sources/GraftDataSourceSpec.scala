@@ -64,10 +64,11 @@ final class CountingIn(in: FSDataInputStream) extends java.io.InputStream
   override def close(): Unit = in.close()
 }
 
-/** The DataSource V2 read surface — the engine's one projected and
-  * range decode: `spark.read.format("graft")` must equal DecodeJob.run
-  * bit-for-bit, prune columns down to the parquet block leaves, and
-  * consume url and warc_ts range predicates exactly. */
+/** The DataSource V2 read surface — the engine's one decode kernel:
+  * `spark.read.format("graft")` (and DecodeJob.run, which is that read
+  * typed) must return the encoded source rows bit-for-bit, prune columns
+  * down to the parquet block leaves, and consume url and warc_ts range
+  * predicates exactly. */
 class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlanHelper {
 
   private lazy val dir = {
@@ -78,6 +79,9 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
   }
 
   private def read(): DataFrame = spark.read.format("graft").load(dir)
+
+  /** The rows `dir` (and `legacyDir`) were encoded from. */
+  private def encoded(): DataFrame = WebtextGen.pages(spark, 800L, partitions = 4).toDF()
 
   /** A simulated pre-round-7 chunk table: the same chunks with the
     * tsMin/tsMax statistics columns REMOVED. */
@@ -99,27 +103,38 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
   private def chain(t: Throwable): Seq[String] =
     Option(t).toSeq.flatMap(e => String.valueOf(e.getMessage) +: chain(e.getCause))
 
-  /** Runs `pred` as a graft read of `table` and over DecodeJob's decode of
-    * it (which never goes through GraftScan, so nothing is pruned), asserts
-    * both return the same rows, and returns the executed scan node. */
-  private def checkedScan(table: String, pred: Column): BatchScanExec = {
+  /** Runs `pred` as a graft read of `table`, asserts it returns exactly
+    * the rows of `source` (the rows `table` was encoded from) that match
+    * `pred`, and returns the executed scan node. exceptAll both ways
+    * covers url/text/lang strings, html bytes and warc_ts micros. */
+  private def checkedScan(table: String, source: DataFrame, pred: Column): BatchScanExec = {
     val df = spark.read.format("graft").load(table).filter(pred)
-    val got = df.collect().sortBy(_.getString(0)).toSeq
-    val want = DecodeJob.run(spark, table).toDF().filter(pred)
-      .collect().sortBy(_.getString(0)).toSeq
-    assert(got == want, s"pruned read of [$pred]: got ${got.size} rows, want ${want.size}")
+    val want = source.filter(pred)
+    assert(df.exceptAll(want).count() == 0L, s"pruned read of [$pred] has extra rows")
+    assert(want.exceptAll(df).count() == 0L, s"pruned read of [$pred] lost rows")
+    // run df's own plan, so the scan node below carries its metrics
+    df.collect()
     collectFirst(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
       .getOrElse(fail("no BatchScanExec in\n" + df.queryExecution.executedPlan))
   }
 
-  test("full read equals DecodeJob.run on every column") {
+  test("full read equals the encoded source rows") {
     val got = read()
-    val want = DecodeJob.run(spark, dir).toDF()
+    val want = encoded()
     assert(got.count() == 800L)
     // exceptAll both directions: covers url/text/lang strings, html
     // binary, and warc_ts micros — any cell divergence survives one side
     assert(got.exceptAll(want).count() == 0L, "dsv2 read has extra rows")
     assert(want.exceptAll(got).count() == 0L, "dsv2 read lost rows")
+  }
+
+  test("DecodeJob.run is one GraftScan of every column") {
+    val plan = DecodeJob.run(spark, dir).queryExecution.executedPlan
+    val scans = collect(plan) { case b: BatchScanExec => b }
+    assert(scans.size == 1 && scans.head.scan.isInstanceOf[GraftScan],
+      "DecodeJob.run is not one GraftScan:\n" + plan)
+    assert(scans.head.scan.description().contains("ReadColumns=[url,warc_ts,html,text,lang]"),
+      "DecodeJob.run does not read every column:\n" + plan)
   }
 
   test("column pruning reaches the scan and values match the projection") {
@@ -243,11 +258,16 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
       graft.ScalingLevel.rmrf(bad)
       spark.read.parquet(s"$dir/chunks").withColumn("rows", rows)
         .write.mode("overwrite").parquet(s"$bad/chunks")
-      val err = intercept[Exception] {
+      val projected = intercept[Exception] {
         spark.read.format("graft").load(bad).select("url").collect()
       }
-      assert(chain(err).exists(m => m.contains("chunk pid=") && m.contains("blockIdx=") &&
-        m.contains("corrupt metadata")), s"$what: ${chain(err)}")
+      // the full typed decode is the same reader, with the same guard
+      val full = intercept[Exception] {
+        DecodeJob.run(spark, bad).write.format("noop").mode("overwrite").save()
+      }
+      for ((read, err) <- Seq("projected" -> projected, "full" -> full))
+        assert(chain(err).exists(m => m.contains("chunk pid=") && m.contains("blockIdx=") &&
+          m.contains("corrupt metadata")), s"$what, $read read: ${chain(err)}")
     }
   }
 
@@ -299,7 +319,7 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
 
     source.write.format("graft").option("partitions", "4").mode("append").save(out)
     // the write produced the REAL engine layout: chunks + manifest, and
-    // the DSv2 read and DecodeJob both see exactly the source rows
+    // the DSv2 read sees exactly the source rows
     val back = spark.read.format("graft").load(out)
     assert(back.count() == 600L)
     assert(back.exceptAll(source).count() == 0L && source.exceptAll(back).count() == 0L)
@@ -455,19 +475,19 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
       "strict url range" -> (col("url") > urls(0) && col("url") < urls(20)),
       "warc_ts range" -> (col("warc_ts") >= ts(micros(0)) && col("warc_ts") <= ts(micros(1))))
     cases.foreach { case (what, pred) =>
-      val scan = checkedScan(dir, pred)
+      val scan = checkedScan(dir, encoded(), pred)
       val planned = scan.inputPartitions.length
       assert(planned >= 1 && planned < files,
         s"$what planned $planned input partitions for $files chunk files")
     }
     // an unfiltered scan plans every file
-    assert(checkedScan(dir, lit(true)).inputPartitions.length == files)
+    assert(checkedScan(dir, encoded(), lit(true)).inputPartitions.length == files)
   }
 
   test("the scan reports listed and pruned chunk files as driver metrics") {
     import spark.implicits._
     val one = read().agg(org.apache.spark.sql.functions.min("url")).as[String].head()
-    val scan = checkedScan(dir, $"url" === one)
+    val scan = checkedScan(dir, encoded(), $"url" === one)
     val listed = scan.metrics("chunkFilesListed").value
     val pruned = scan.metrics("chunkFilesPruned").value
     assert(listed == chunkFiles(dir).toLong, s"chunkFilesListed $listed")
@@ -481,30 +501,32 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
     val minTs = read().agg(min(unix_micros($"warc_ts"))).as[Long].head()
     val pred = col("warc_ts") === timestamp_micros(lit(minTs))
     // the same bound prunes the table that has the statistics ...
-    assert(checkedScan(dir, pred).inputPartitions.length < chunkFiles(dir))
+    assert(checkedScan(dir, encoded(), pred).inputPartitions.length < chunkFiles(dir))
     // ... and plans every file of the one that lacks them
     val files = chunkFiles(legacyDir)
     assert(files >= 1)
-    assert(checkedScan(legacyDir, pred).inputPartitions.length == files)
+    assert(checkedScan(legacyDir, encoded(), pred).inputPartitions.length == files)
   }
 
   test("a read after a further commit sees the new chunk files") {
     import org.apache.spark.sql.functions._
     val t = tmpDir("graft-dsv2-commits")
     graft.ScalingLevel.rmrf(t)
+    def batch(seed: Long, suffix: String): DataFrame =
+      WebtextGen.pages(spark, 400L, seed = seed, partitions = 2)
+        .withColumn("url", concat(col("url"), lit(suffix)))
     def commit(seed: Long, suffix: String): Unit =
       EncodeJob.run(spark,
-        WebtextGen.pages(spark, 400L, seed = seed, partitions = 2)
-          .withColumn("url", concat(col("url"), lit(suffix)))
+        batch(seed, suffix)
           .as[graft.model.Page](org.apache.spark.sql.Encoders.product[graft.model.Page]),
         t, EncodeJob.Config(numPartitions = 4, resume = false,
           attemptId = Some(s"batch-$seed"), wholeTableStats = false))
     val pred = col("url") >= "https://h1." && col("url") < "https://h2."
     commit(51L, "")
-    val before = checkedScan(t, pred)
+    val before = checkedScan(t, batch(51L, ""), pred)
     val filesBefore = chunkFiles(t)
     commit(52L, "/b")
-    val after = checkedScan(t, pred)
+    val after = checkedScan(t, batch(51L, "").union(batch(52L, "/b")), pred)
     assert(chunkFiles(t) > filesBefore)
     assert(after.metrics("chunkFilesListed").value == chunkFiles(t).toLong)
     assert(after.inputPartitions.length > before.inputPartitions.length,
