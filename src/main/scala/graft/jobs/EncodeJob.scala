@@ -4,12 +4,14 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util.zip.CRC32
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.ColumnCodec
 import graft.model._
-import graft.sources.TableIO
+import graft.sources.{ParquetRows, TableIO}
 
 /** Distributed per-column encode.
   *
@@ -17,29 +19,46 @@ import graft.sources.TableIO
   *   read -> assign pid from pinned url-range bounds (narrow column op,
   *   no typed materialization) -> filter completed (resume) ->
   *   repartition(pid) -> sortWithinPartitions(pid, url) ->
-  *   mapPartitions(encode) -> write chunks; the kernel's per-pid metadata
-  *   summaries ride back on an accumulator (the Spark analog of the
-  *   reference's MPI_Allgather of sizes, fl_gpu.cu:100-109) and become
-  *   the manifest — the chunk table is written once and never re-read.
+  *   mapPartitions(encode + write) -> collect. Each kernel task writes its
+  *   chunks to ONE parquet file under `chunks/_staging-<attemptId>/` and
+  *   returns one small row: the file name and the task's per-pid
+  *   [[PidSummary]]s (the Spark analog of the reference's MPI_Allgather
+  *   of sizes, fl_gpu.cu:100-109). The driver renames the reported files
+  *   into `chunks/` and writes the summaries as the manifest — the chunk
+  *   table is written once and never re-read, and no write goes through
+  *   Spark's file writer.
   *
   * Exactly one shuffle (the pid repartition). A fresh-table encode runs
-  * five Spark jobs: the bounds sample (one pass, count+reservoir fused;
-  * map stage + collect), the encode+write (shuffle map stage + write) and
-  * the manifest write. A streaming commit onto pinned bounds runs three:
-  * the encode+write and the manifest write (EncodePipelineSpec pins both
-  * counts). Encoding is shuffle-free and embarrassingly parallel,
-  * mirroring the reference's 128-aligned per-rank split
+  * four Spark jobs: the bounds sample (one pass, count+reservoir fused;
+  * map stage + collect) and the encode (shuffle map stage + the collect
+  * whose tasks write the chunk files). A streaming commit onto pinned
+  * bounds runs two: the encode's shuffle map stage and its collect
+  * (EncodePipelineSpec pins both counts). The manifest is written by the
+  * driver, with no job. Encoding is shuffle-free and embarrassingly
+  * parallel, mirroring the reference's 128-aligned per-rank split
   * (/root/reference/src/file_io.cu:39-56); the reference's
   * gather-to-rank-0 (fl_gpu.cu:41-74) is inverted into a distributed
   * write + O(#pids) metadata, which is the piece that scales.
   *
-  * Manifest-vs-disk consistency: the accumulator is updated in a
-  * transformation, where Spark only guarantees at-least-once delivery
-  * (exactly-once holds for actions only) — so speculative or retried
-  * twin attempts may each report the same pid. Dedupe by pid handles
-  * that, with the twins asserted to agree (same blocks/rows/encBytes/
-  * crc) so real divergence fails loudly; the committed chunk files
-  * themselves are exactly-once via the parquet output committer.
+  * Exactly once by construction: a `collect` keeps one result per
+  * partition, from the task attempt Spark accepted, so each pid's
+  * summary arrives once and names the one file that holds its chunks.
+  * File names carry the partition id, the attemptId, a per-run nonce and
+  * the task attempt id, so retried or speculative twins never collide;
+  * files no accepted task reported (failed attempts, speculative losers)
+  * are deleted with the staging dir. A straggler that writes after that
+  * delete leaves only an `_`-prefixed dir, which the DSv2 scan's listing
+  * and Spark's file index both skip. A task with no rows writes nothing.
+  *
+  * Commit order: `begin-` marker, the job, `mkdirs chunks/` (even for an
+  * empty input, so the table stays readable), renames, staging delete,
+  * `chunks-` marker, manifest (hidden temp name, then renamed to a
+  * unique `part-…parquet`), marker cleanup. A crash before the `chunks-`
+  * marker rolls the attempt back on the next reconcile (a partial set of
+  * renamed files is indistinguishable from a complete one); a crash after
+  * it rebuilds the manifest rows from the chunk metadata; a crash after
+  * the manifest rename is deduplicated by the reconcile's anti-join
+  * ([[reconcileOrphans]]).
   *
   * Resume (north_rule): url-range bounds are sampled once and pinned in
   * `bounds.json`; pid assignment is a pure function of (url, bounds), so
@@ -63,13 +82,19 @@ final case class PidPage(
     pid: Int, url: String, warc_ts: java.sql.Timestamp,
     html: Array[Byte], text: String, lang: String)
 
-/** Per-pid metadata summary the encode kernel sends back on an
-  * accumulator (O(#pids) driver state; payload bytes never leave the
-  * executors). `codecs` keeps the distinct codec set per column. */
+/** Per-pid metadata summary of one kernel task, folded over the chunks
+  * it wrote (O(#pids) driver state; payload bytes never leave the
+  * executors). It returns to the driver in the encode action's result
+  * row ([[ChunkFile]]) and becomes that pid's manifest row. `codecs`
+  * keeps the distinct codec set per column. */
 final case class PidSummary(
     pid: Int, blocks: Long, rows: Long, urlMin: String, urlMax: String,
     rawBytes: Long, encBytes: Long, flBaselineBytes: Long, encodeNanos: Long,
     textCrc32Xor: Long, codecs: Map[String, Set[String]])
+
+/** The encode action's one result row per task that wrote chunks: the
+  * staged file's name and the summaries of the pids it holds. */
+final case class ChunkFile(file: String, pids: Seq[PidSummary])
 
 object EncodeJob {
 
@@ -86,7 +111,7 @@ object EncodeJob {
       /** Checkpoint wave: only encode pending pids < this bound, then
         * commit chunks+manifest. Repeated calls with a growing bound (or
         * None = all) give partition-granular resumability even though each
-        * parquet write commit is atomic. */
+        * commit covers a whole run. */
       pidUpperBound: Option[Int] = None,
       /** "auto" = stats-driven selector (the engine); "fl" = FL bit-pack
         * only, the exact work of the reference CPU path, for
@@ -133,8 +158,9 @@ object EncodeJob {
   def manifestDir(outDir: String) = s"$outDir/manifest"
   def boundsPath(outDir: String) = s"$outDir/bounds.json"
 
-  /** Per-attempt marker files: `begin-<id>` before the chunk write,
-    * `chunks-<id>` after the chunk job commits, both deleted once the
+  /** Per-attempt marker files: `begin-<id>` before the encode job,
+    * `chunks-<id>` after its staged chunk files are renamed into
+    * `chunks/`, both deleted once the
     * attempt's manifest rows are committed. An attempt with NO markers is
     * therefore fully committed; any surviving marker names exactly the
     * attempts a crash may have left half-done — so the per-micro-batch
@@ -379,10 +405,11 @@ object EncodeJob {
     // e.g. after an empty first run that committed nothing; the normal
     // resume never reaches it.)
     // Both probes check for committed ROWS, not mere dir existence: a
-    // manifest/ (or chunks/) dir holding only the committer's _temporary
-    // — a crash during the very first write — has committed NOTHING and
-    // must not trip the guard (it would otherwise refuse every restart
-    // of a first run that died mid-write, a permanent crash loop).
+    // manifest/ (or chunks/) dir holding only a hidden temp file or a
+    // staging dir — a crash during the very first write — has committed
+    // NOTHING and must not trip the guard (it would otherwise refuse
+    // every restart of a first run that died mid-write, a permanent
+    // crash loop).
     if (cfg.resume && cfg.numPartitions > 1 &&
         !TableIO.exists(spark, boundsPath(outDir)) &&
         ((TableIO.exists(spark, manifestDir(outDir)) &&
@@ -435,7 +462,15 @@ object EncodeJob {
     // row will carry, so a crash between the two commits is reconcilable
     // under the original attempt identity
     val attemptId = cfg.attemptId.getOrElse(java.util.UUID.randomUUID().toString)
-    val summaryAcc = spark.sparkContext.collectionAccumulator[PidSummary]("graft.pidSummaries")
+    val staging = stagingDir(outDir, attemptId)
+    // per-run nonce in every file name: a later run under the SAME
+    // attemptId (pidUpperBound waves, a resumed crash) must never rename
+    // onto a committed file (a local-FS rename overwrites)
+    val nonce = java.util.UUID.randomUUID().toString.take(8)
+    // the session's Hadoop conf as the broadcast the DSv2 scan shares,
+    // so no task deserializes a conf copy of its own
+    val hconf = spark.sessionState.newHadoopConf()
+    val confBc = graft.sources.GraftDataSource.confBroadcast(spark.sparkContext, hconf)
     // Hash repartition on the (already range-derived) pid, WITHOUT the
     // extra sampling pass a repartitionByRange would run over the whole
     // input. Honest balance math: hashing n dense pids into n tasks is
@@ -449,65 +484,60 @@ object EncodeJob {
     // The content-hash tiebreaker makes the sort a TOTAL order even when
     // the same url appears twice (a re-crawl with different content):
     // equal-key rows would otherwise keep nondeterministic relative order
-    // across task attempts, so speculative twin attempts could cut chunks
-    // differently and the manifest twin-agreement assert would fire on a
-    // benign reorder. With the tiebreaker, every attempt encodes
-    // byte-identical chunks regardless of upstream row order.
-    val chunks = withPid
+    // across task attempts, so a retried attempt could cut chunks
+    // differently from the one a crashed run left behind. With the
+    // tiebreaker, every attempt encodes byte-identical chunks regardless
+    // of upstream row order.
+    val encoded = withPid
       .repartition(cfg.numPartitions, $"pid")
       .sortWithinPartitions($"pid", $"url", xxhash64($"warc_ts", $"text", $"html"))
       .as[PidPage]
       .mapPartitions { it =>
-        summarizing(encodePartition(it, targetBytes, maxRows, flOnly, attemptId), summaryAcc)
+        val tc = org.apache.spark.TaskContext.get()
+        writeChunkFile(encodePartition(it, targetBytes, maxRows, flOnly, attemptId),
+          confBc.value.value, staging,
+          f"part-${tc.partitionId()}%05d-$attemptId-$nonce-${tc.taskAttemptId()}.parquet")
       }
 
     // attempt lineage markers (see [[attemptsDir]]): begin- before the
-    // chunk job, chunks- after its commit, both removed after the manifest
-    // commit — every crash window identifies itself by which markers
-    // survive, so reconcile never has to scan for it.
+    // job, chunks- after the renames, both removed after the manifest —
+    // every crash window identifies itself by which markers survive, so
+    // reconcile never has to scan for it.
     TableIO.touch(spark, s"${attemptsDir(outDir)}/begin-$attemptId")
-    // Chunk payloads are ALREADY compressed by the codec layer, so a file-
-    // level codec on top buys ~nothing on the dominant binary leaves and
-    // costs CPU on a write-bound pipeline (BENCH.md: writes are ~70% of the
-    // 32-core encode wall).
-    TableIO.write(chunks.toDF(), chunksDir(outDir), SaveMode.Append,
-      Map("compression" -> "uncompressed"))
+    val fs = new Path(outDir).getFileSystem(hconf)
+    val written =
+      try encoded.collect()
+      catch {
+        case e: Throwable =>
+          try fs.delete(new Path(staging), true)
+          catch { case s: Exception => e.addSuppressed(s) }
+          throw e
+      }
+    val chunks = new Path(chunksDir(outDir))
+    fs.mkdirs(chunks)
+    written.foreach { w =>
+      val src = new Path(staging, w.file)
+      require(fs.rename(src, new Path(chunks, w.file)), s"graft encode: rename $src -> $chunks failed")
+    }
+    fs.delete(new Path(staging), true)
     TableIO.touch(spark, s"${attemptsDir(outDir)}/chunks-$attemptId")
     val tEncode = System.nanoTime()
 
     // manifest straight from the kernel summaries (O(#pids), no re-read of
-    // the chunk table); append-safe for resume. NB the accumulator is
-    // updated in a TRANSFORMATION (the mapPartitions feeding the write) —
-    // Spark's exactly-once accumulator guarantee covers only actions, so
-    // speculative/retried twin attempts can each deliver a summary for the
-    // same pid. The pid dedupe below handles that; duplicates are asserted
-    // byte-equal on (blocks, rows, encBytes, textCrc32Xor) so a REAL
-    // divergence (two attempts that encoded different data) fails loudly
-    // instead of being masked by an arbitrary pick.
+    // the chunk table); append-safe for resume. The repartition puts each
+    // pid in exactly one task, and the action keeps one result per task,
+    // so every pid has exactly one summary.
     val finishedAt = System.currentTimeMillis()
     // checked ONCE, before this run's manifest write: when no manifest
     // existed, this run's rows ARE the whole manifest
     val manifestExisted = TableIO.exists(spark, manifestDir(outDir))
-    val manifestRows = {
-      import scala.jdk.CollectionConverters._
-      summaryAcc.value.asScala
-        .groupBy(_.pid).map { case (pid, twins) =>
-          val agree = twins.forall(t =>
-            t.blocks == twins.head.blocks && t.rows == twins.head.rows &&
-              t.encBytes == twins.head.encBytes && t.textCrc32Xor == twins.head.textCrc32Xor)
-          require(agree, s"pid $pid: twin task attempts produced DIFFERENT summaries " +
-            s"(${twins.map(t => (t.blocks, t.rows, t.encBytes)).toSet}) — non-deterministic encode?")
-          twins.minBy(_.encodeNanos) // deterministic pick among agreeing twins
-        }
-        .toSeq.sortBy(_.pid)
-        .map(s => PartitionManifest(
-          s.pid, s.blocks, s.rows, s.urlMin, s.urlMax, s.rawBytes, s.encBytes,
-          s.flBaselineBytes, s.encodeNanos, s.textCrc32Xor,
-          s.codecs.map { case (c, set) => c -> set.toSeq.sorted.mkString("|") },
-          attemptId, finishedAt))
-    }
-    if (manifestRows.nonEmpty)
-      TableIO.write(spark.createDataset(manifestRows).toDF(), manifestDir(outDir), SaveMode.Append)
+    val manifestRows = written.toSeq.flatMap(_.pids).sortBy(_.pid)
+      .map(s => PartitionManifest(
+        s.pid, s.blocks, s.rows, s.urlMin, s.urlMax, s.rawBytes, s.encBytes,
+        s.flBaselineBytes, s.encodeNanos, s.textCrc32Xor,
+        s.codecs.map { case (c, set) => c -> set.toSeq.sorted.mkString("|") },
+        attemptId, finishedAt))
+    writeManifest(fs, outDir, manifestRows, hconf)
     // (pids, rows, rawBytes, encBytes, flBaselineBytes) committed by
     // THIS invocation, for Result
     val thisRun = (manifestRows.length.toLong, manifestRows.map(_.rows).sum,
@@ -564,30 +594,51 @@ object EncodeJob {
     * caller selects are ever read (each encoded column is a top-level
     * struct leaf), so payload bytes stay on disk. The pinned schema
     * reads an empty chunks directory (an encode of an empty input) as
-    * zero rows instead of failing parquet schema inference. */
+    * zero rows instead of failing parquet schema inference. Spark's file
+    * index skips `_`-prefixed dirs, so staged files never show here. */
   private[graft] def chunkMetaScan(spark: SparkSession, outDir: String) =
-    spark.read
-      .schema(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
-      .format(TableIO.format(spark)).load(chunksDir(outDir))
+    spark.read.schema(ChunkRows.schema).parquet(chunksDir(outDir))
 
   /** Explicit-schema manifest read. The schema matters beyond pruning: a
-    * manifest dir that EXISTS but holds no data files yet (the committer
-    * creates `_temporary` before the first row lands, so a crash during
-    * the very first manifest write leaves exactly that) must read as an
-    * EMPTY table — a schema-inferring read throws 'Unable to infer
+    * manifest dir that EXISTS but holds no data file (a crash during the
+    * very first manifest write leaves only a hidden temp file, or a
+    * table written by Spark's committer only its `_temporary`) must read
+    * as an EMPTY table — a schema-inferring read throws 'Unable to infer
     * schema' there, which would turn that one crash window into a
     * permanent restart loop for both batch resume and the streaming
     * replay probe. */
   private[graft] def manifestScan(spark: SparkSession, outDir: String) =
-    spark.read
-      .schema(org.apache.spark.sql.Encoders.product[PartitionManifest].schema)
-      .format(TableIO.format(spark)).load(manifestDir(outDir))
+    spark.read.schema(ManifestRows.schema).parquet(manifestDir(outDir))
+
+  /** Parquet layouts of the two tables the engine writes itself. */
+  private[graft] lazy val ChunkRows =
+    new ParquetRows(org.apache.spark.sql.Encoders.product[EncodedChunk].schema)
+  private[graft] lazy val ManifestRows =
+    new ParquetRows(org.apache.spark.sql.Encoders.product[PartitionManifest].schema)
+
+  /** Where an attempt's kernel tasks stage their chunk files. */
+  private[graft] def stagingDir(outDir: String, attemptId: String) =
+    s"${chunksDir(outDir)}/_staging-$attemptId"
+
+  /** Writes `rows` as ONE manifest file, from the driver with no Spark
+    * job: under a hidden temp name first, then renamed to a unique
+    * `part-…parquet`, so a [[manifestScan]] never sees a partial file.
+    * No rows, no file. */
+  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem, outDir: String,
+                            rows: Seq[PartitionManifest], conf: Configuration): Unit =
+    if (rows.nonEmpty) {
+      val name = s"part-${java.util.UUID.randomUUID()}.parquet"
+      val tmp = new Path(manifestDir(outDir), s".$name.tmp")
+      ManifestRows.write(tmp, conf, rows.iterator)
+      val dst = new Path(manifestDir(outDir), name)
+      require(fs.rename(tmp, dst), s"graft encode: rename $tmp -> $dst failed")
+    }
 
   /** Distributed manifest derivation: one manifest row per
     * (pid, attemptId), aggregated from chunk metadata columns with no
     * driver materialization. Spark's StringType min/max compares UTF-8
     * BYTES (UTF8String order) — the same ordering the kernel sort, the
-    * accumulator merge and the decode range filter use; Java String
+    * kernel's summary merge and the decode range filter use; Java String
     * order (UTF-16 code units) would disagree on supplementary-plane
     * characters. */
   private def manifestRowsFromChunks(
@@ -629,14 +680,14 @@ object EncodeJob {
     * other attempt's files) under the chunks' ORIGINAL attemptId — which
     * is what lets the streaming replay-skip recognize a crashed "batch-N"
     * as committed. Attempts that crashed before their chunks- marker
-    * ROLL BACK instead ([[dropAttemptChunks]]): their chunk-job
+    * ROLL BACK instead ([[dropAttemptChunks]]): their chunk commit's
     * completion is unprovable, so their files are deleted and the batch
     * re-encodes on resume/replay. Returns the reconciled pid set.
     *
     * CONTRACT — single writer per outDir. The begin-only path is
     * DESTRUCTIVE: it deletes the chunk files of attempts it cannot prove
     * committed. Against an outDir with a LIVE encode there is a window
-    * (after the live run's chunk-job commit, before it touches its
+    * (after the live run's renames into chunks/, before it touches its
     * chunks- marker) where a concurrent reconcile would delete freshly
     * committed data while the live run still emits manifest rows for it.
     * Only call this from the process that owns the encode (the batch
@@ -648,20 +699,19 @@ object EncodeJob {
     val begun = names.collect { case n if n.startsWith("begin-") => n.stripPrefix("begin-") }.toSet
     val chunked = names.collect { case n if n.startsWith("chunks-") => n.stripPrefix("chunks-") }.toSet
     if ((begun ++ chunked).isEmpty) return Set.empty // steady state: no jobs at all
-    // begin- without chunks-: the chunk JOB's completion is unproven —
-    // FileOutputCommitter's commitJob (v1 AND v2) is a sequence of
-    // renames, not one atomic operation, so a driver killed mid-commit
-    // can leave a PARTIAL set of files. Reconciling those would launder
-    // a half-write into committed lineage (silent loss); instead the
-    // attempt is rolled BACK — its chunk files are dropped and the
-    // batch re-encodes on resume/replay (its offsets/pids were never
-    // marked committed). Committer-independent by construction.
+    // begin- without chunks-: the chunk commit's completion is unproven
+    // — the driver renames the staged files into chunks/ one by one, so
+    // a driver killed mid-commit can leave a PARTIAL set of files.
+    // Reconciling those would launder a half-write into committed
+    // lineage (silent loss); instead the attempt is rolled BACK — its
+    // chunk files and staging dir are dropped and the batch re-encodes
+    // on resume/replay (its offsets/pids were never marked committed).
     if ((begun -- chunked).nonEmpty) dropAttemptChunks(spark, outDir, begun -- chunked)
     if (chunked.isEmpty) Set.empty
     else reconcileAttempts(spark, outDir, chunked)
   }
 
-  /** Roll back attempts whose chunk-job completion is unproven: delete
+  /** Roll back attempts whose chunk commit is unproven: delete
     * exactly the UNMANIFESTED chunk files carrying their attemptId, then
     * clear the begin- markers. Order matters — files first, marker last
     * — so a crash here re-runs the (idempotent) rollback.
@@ -672,16 +722,13 @@ object EncodeJob {
     *    earlier COMPLETED wave — committed lineage, never a rollback
     *    candidate (deleting it would orphan the manifest row and lose
     *    data permanently, since the pid stays in the completed set);
-    *  - the crashed job's leftover task outputs under chunks/_temporary
-    *    are deleted too: FileOutputCommitter's next append commitJob
-    *    merges any committed task dirs it finds there, which would
-    *    RESURRECT the rolled-back attempt's rows as untracked duplicates
-    *    after the replay re-encodes. */
+    *  - the crashed attempt's staging dir (`chunks/_staging-<id>`) is
+    *    deleted too: no read ever sees it, but it holds the payload of
+    *    every file the crash left unrenamed. */
   private def dropAttemptChunks(spark: SparkSession, outDir: String,
                                 attempts: Set[String]): Unit = {
     import spark.implicits._
-    val tmp = new org.apache.hadoop.fs.Path(chunksDir(outDir), "_temporary")
-    tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmp, true)
+    attempts.foreach(id => TableIO.deleteRecursive(spark, stagingDir(outDir, id)))
     val meta = chunkMetaScan(spark, outDir)
       .filter($"attemptId".isin(attempts.toSeq: _*))
       .select($"pid", $"attemptId", input_file_name().as("f"))
@@ -726,9 +773,8 @@ object EncodeJob {
         Seq("pid", "attemptId"), "left_anti"))
       .as[PartitionManifest]
       .collect() // O(#orphan pids): bounded by the crashed attempts, not the table
-    if (orphanRows.nonEmpty)
-      TableIO.write(spark.createDataset(orphanRows.toSeq).toDF(),
-        manifestDir(outDir), SaveMode.Append)
+    val conf = spark.sessionState.newHadoopConf()
+    writeManifest(new Path(outDir).getFileSystem(conf), outDir, orphanRows.toSeq, conf)
     pending.foreach { id =>
       TableIO.delete(spark, s"${attemptsDir(outDir)}/begin-$id")
       TableIO.delete(spark, s"${attemptsDir(outDir)}/chunks-$id")
@@ -736,22 +782,17 @@ object EncodeJob {
     orphanRows.map(_.pid).toSet
   }
 
-  /** Pass-through iterator that folds every produced chunk into per-pid
-    * summaries and flushes them to the accumulator exactly once, when the
-    * kernel is exhausted (i.e. when the task has produced all its rows). */
-  private def summarizing(
-      inner: Iterator[EncodedChunk],
-      acc: org.apache.spark.util.CollectionAccumulator[PidSummary]): Iterator[EncodedChunk] =
-    new Iterator[EncodedChunk] {
-      private val agg = scala.collection.mutable.LinkedHashMap.empty[Int, PidSummary]
-      private var flushed = false
-      def hasNext: Boolean = {
-        val h = inner.hasNext
-        if (!h && !flushed) { flushed = true; agg.values.foreach(acc.add) }
-        h
-      }
-      def next(): EncodedChunk = {
-        val c = inner.next()
+  /** The kernel task's write: `chunks` go to ONE parquet file
+    * `staging/name`, opened with the task's copy of the broadcast conf,
+    * and the task returns that file's name with per-pid summaries folded
+    * over the chunks. No chunks, no file and no row — no footer-only
+    * file ever reaches the table. */
+  private def writeChunkFile(chunks: Iterator[EncodedChunk], conf: Configuration,
+                             staging: String, name: String): Iterator[ChunkFile] =
+    if (!chunks.hasNext) Iterator.empty
+    else {
+      val agg = scala.collection.mutable.LinkedHashMap.empty[Int, PidSummary]
+      ChunkRows.write(new Path(staging, name), conf, chunks.map { c =>
         val cCodecs = c.cols.map(col => col.name -> Set(col.codec)).toMap
         agg(c.pid) = agg.get(c.pid) match {
           case None => PidSummary(c.pid, 1L, c.rows, c.urlMin, c.urlMax, c.rawBytes,
@@ -770,7 +811,8 @@ object EncodeJob {
             })
         }
         c
-      }
+      })
+      Iterator.single(ChunkFile(name, agg.values.toSeq))
     }
 
   /** Per-partition kernel: consume (pid,url)-sorted rows, cut a chunk at

@@ -135,7 +135,9 @@ object FlFileJob {
     * task: by this object's two jobs, and by the DSv2 connector
     * ([[graft.sources]]), which shares one broadcast across scans while
     * [[sameEntries]] holds and opens every chunk file with read options
-    * built from it — the one copy of this wire format in the codebase. */
+    * built from it; the encode's kernel tasks write their chunk files
+    * with the same shared broadcast — the one copy of this wire format
+    * in the codebase. */
   private[graft] final class SerializableConf(conf: Configuration) extends Serializable {
     private val entries: Array[String] = {
       import scala.jdk.CollectionConverters._

@@ -154,8 +154,9 @@ object GraftDataSource {
     * its SparkContext and entries match; a fresh broadcast per scan cost
     * ~4 ms of planning (serialize and write to the block store) plus a
     * Configuration rebuild in each executor's first task. A changed
-    * setting is a new broadcast. */
-  private[sources] def confBroadcast(sc: SparkContext, conf: Configuration)
+    * setting is a new broadcast. The encode's kernel tasks open their
+    * chunk files with the same broadcast ([[graft.jobs.EncodeJob.run]]). */
+  private[graft] def confBroadcast(sc: SparkContext, conf: Configuration)
       : Broadcast[SerializableConf] = synchronized {
     val wire = new SerializableConf(conf)
     if (sharedConf == null || !(sharedConf._1 eq sc) || !sharedConf._2.sameEntries(wire))
@@ -695,12 +696,15 @@ final class GraftScan(path: String, required: StructType,
       try fs.listStatus(new HPath(root, "chunks"))
       catch {
         case _: java.io.FileNotFoundException =>
-          // an encode of an EMPTY input commits no chunks dir — that is
-          // a valid zero-row table, not an error (mirror chunkMetaScan's
-          // pinned-schema behavior); only a missing root is
+          // a table written before the encode always made chunks/ may
+          // lack it after an EMPTY input — a valid zero-row table, not an
+          // error (mirror chunkMetaScan's pinned-schema behavior); only a
+          // missing root is
           require(fs.exists(root), s"graft source: no such encode directory: $path")
           Array.empty[FileStatus]
       }
+    // committed chunk files only: the encode's staging dirs
+    // (`_staging-<attemptId>/`) are dirs, and `_`/`.` names are sidecars
     all.filter { st =>
       val n = st.getPath.getName
       st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")

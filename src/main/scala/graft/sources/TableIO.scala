@@ -1,9 +1,20 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.OutputFile
+import org.apache.parquet.io.api.{Binary, RecordConsumer}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, MapType, StringType, StructType}
 
-/** Thin table-format indirection for every table the engine reads/writes
-  * (input pages, encoded chunks, manifests, decoded output).
+/** Thin table-format indirection for the tables the engine reads and
+  * writes through Spark: input pages and decoded output.
   *
   * BASELINE.json's north_rule targets Iceberg tables; this sandbox ships
   * no Iceberg runtime jar (/opt/spark/jars has none and dependency
@@ -11,21 +22,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * same file layout an Iceberg table's data files use. On a cluster with
   * `iceberg-spark-runtime` on the classpath, setting
   * `spark.graft.table.format=iceberg` (plus the usual catalog conf)
-  * switches every read/write site in one place; no job code changes.
+  * switches those read/write sites in one place; no job code changes.
   *
-  * The conf reaches no decode: every decode (DecodeJob.run, the CLI's
-  * `decode`, `spark.read.format("graft")`) is the DSv2 scan, which lists
-  * the parquet chunk layout itself and refuses any other configured
-  * format with a named error.
-  *
-  * Documented exclusion: the crash-RECOVERY surfaces — attempt-marker
-  * sidecars under `_attempts/`, the begin-only rollback's raw chunk-file
-  * deletes, and the `_temporary` cleanup — assume a directory-backed
-  * chunk table. Under a snapshot-managed format those file deletes would
-  * bypass table metadata (stale references -> FileNotFound on scan), so
-  * an Iceberg deployment must either route rollback through the table
-  * format (DELETE by attemptId + expire snapshots) or keep the CHUNK
-  * table on the directory layout and switch only input/decoded tables.
+  * The conf covers input and decoded tables only. The chunk and manifest
+  * tables are parquet directories, always: the encode writes their files
+  * itself ([[ParquetRows]]), its crash recovery (attempt markers under
+  * `_attempts/`, staged files under `chunks/_staging-<id>/`, the
+  * begin-only rollback's file deletes) works on that directory layout,
+  * and every decode (DecodeJob.run, the CLI's `decode`,
+  * `spark.read.format("graft")`) is the DSv2 scan, which lists the
+  * parquet chunk layout itself and refuses any other configured format
+  * with a named error.
   */
 object TableIO {
 
@@ -37,9 +44,8 @@ object TableIO {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format(format(spark)).load(path)
 
-  def write(df: DataFrame, path: String, mode: SaveMode,
-            options: Map[String, String] = Map.empty): Unit =
-    df.write.format(format(df.sparkSession)).options(options).mode(mode).save(path)
+  def write(df: DataFrame, path: String, mode: SaveMode): Unit =
+    df.write.format(format(df.sparkSession)).mode(mode).save(path)
 
   // Existence checks and sidecar text files (bounds.json) go through the
   // Hadoop FileSystem API, NOT java.nio: a `hdfs://` or `s3a://` outDir
@@ -130,4 +136,93 @@ object TableIO {
     * which would wreck any sizing rule built on it. */
   def contentLength(spark: SparkSession, path: String): Long =
     fs(spark, path).getContentSummary(new org.apache.hadoop.fs.Path(path)).getLength
+}
+
+/** Writes case-class rows of `schema` (an `Encoders.product` schema) as
+  * uncompressed parquet files without Spark's file writer: no Spark job,
+  * no write-job description shipped to tasks, callable from a task or
+  * the driver. The file schema is the one Spark's own writer derives
+  * ([[SparkToParquetSchemaConverter]], default non-legacy layout), and
+  * the rows go straight to parquet-hadoop's record consumer, as Spark's
+  * `ParquetWriteSupport` sends them, so the column chunks carry the
+  * encodings, sizes and row-group statistics Spark's writer produces —
+  * plan-time pruning reads the same `urlMin`/`urlMax`/`tsMin`/`tsMax`
+  * statistics and Spark reads the files like any it wrote. Chunk
+  * payloads are ALREADY compressed by the codec layer, so a file-level
+  * codec on top would buy ~nothing and cost CPU on a write-bound
+  * pipeline (BENCH.md). */
+final class ParquetRows(val schema: StructType) {
+  val messageType: MessageType = new SparkToParquetSchemaConverter().convert(schema)
+
+  /** One file at `path` holding `rows` (fails if `path` exists). */
+  def write(path: Path, conf: Configuration, rows: Iterator[Product]): Unit = {
+    val w = new Builder(HadoopOutputFile.fromPath(path, conf)).withConf(conf)
+      .withCompressionCodec(CompressionCodecName.UNCOMPRESSED).build()
+    try rows.foreach(w.write)
+    catch {
+      case e: Throwable =>
+        try w.close() catch { case s: Throwable => e.addSuppressed(s) }
+        throw e
+    }
+    w.close()
+  }
+
+  private final class Builder(file: OutputFile) extends ParquetWriter.Builder[Product, Builder](file) {
+    override def self(): Builder = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[Product] = new RowWriteSupport
+  }
+
+  private final class RowWriteSupport extends WriteSupport[Product] {
+    private var rc: RecordConsumer = _
+    override def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(messageType, java.util.Collections.emptyMap[String, String]())
+    override def prepareForWrite(consumer: RecordConsumer): Unit = rc = consumer
+    override def write(row: Product): Unit = {
+      rc.startMessage()
+      fields(schema, row)
+      rc.endMessage()
+    }
+
+    /** null and None are absent optional values. */
+    private def fields(st: StructType, p: Product): Unit = {
+      var i = 0
+      while (i < st.length) {
+        val v = p.productElement(i) match {
+          case Some(x) => x
+          case None => null
+          case x => x
+        }
+        if (v != null) {
+          rc.startField(st(i).name, i)
+          value(st(i).dataType, v)
+          rc.endField(st(i).name, i)
+        }
+        i += 1
+      }
+    }
+
+    /** A map is the converter's repeated `key_value` group. */
+    private def value(t: DataType, v: Any): Unit = (t, v) match {
+      case (IntegerType, x: Int) => rc.addInteger(x)
+      case (LongType, x: Long) => rc.addLong(x)
+      case (StringType, x: String) => rc.addBinary(Binary.fromString(x))
+      case (BinaryType, x: Array[Byte]) => rc.addBinary(Binary.fromConstantByteArray(x))
+      case (s: StructType, x: Product) =>
+        rc.startGroup(); fields(s, x); rc.endGroup()
+      case (m: MapType, x: scala.collection.Map[_, _]) =>
+        rc.startGroup()
+        if (x.nonEmpty) {
+          rc.startField("key_value", 0)
+          x.foreach { case (k, e) =>
+            rc.startGroup()
+            rc.startField("key", 0); value(m.keyType, k); rc.endField("key", 0)
+            if (e != null) { rc.startField("value", 1); value(m.valueType, e); rc.endField("value", 1) }
+            rc.endGroup()
+          }
+          rc.endField("key_value", 0)
+        }
+        rc.endGroup()
+      case _ => throw new IllegalArgumentException(s"ParquetRows: no parquet mapping for $t = $v")
+    }
+  }
 }

@@ -421,12 +421,12 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     assert(perCol("html")._4 < perCol("html")._3)
   }
 
-  test("a manifest rebuilt by reconcile equals the accumulator manifest") {
+  test("a manifest rebuilt by reconcile equals the committed manifest") {
     import spark.implicits._
     val outDir = tmpDir("graft-rebuilt")
     val ts = new java.sql.Timestamp(1700000000000L)
     // include the supplementary-plane disagreement so the distributed
-    // min/max (binary/UTF-8) is pinned against the accumulator's
+    // min/max (binary/UTF-8) is pinned against the kernel summaries'
     // utf8Compare merge, not just ASCII-lucky. The urls sort last, in two
     // runs of 40 (all E000 ones, then all supplementary ones), longer
     // than the 32-row chunk cap: some chunk ends inside the E000 run and
@@ -450,7 +450,7 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
         $"encBytes", $"flBaselineBytes", $"textCrc32Xor", $"codecs", $"attemptId")
       .orderBy($"pid")
       .collect().map(_.toString).toSeq
-    val fromAccumulator = stable()
+    val committed = stable()
 
     // crash window: chunks committed, manifest commit lost, markers left
     rmrf(EncodeJob.manifestDir(outDir))
@@ -458,8 +458,8 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
       .select($"attemptId").distinct().as[String].head()
     graft.sources.TableIO.touch(spark, s"${EncodeJob.attemptsDir(outDir)}/begin-$tag")
     graft.sources.TableIO.touch(spark, s"${EncodeJob.attemptsDir(outDir)}/chunks-$tag")
-    assert(EncodeJob.reconcileOrphans(spark, outDir).size == fromAccumulator.size)
-    assert(stable() == fromAccumulator)
+    assert(EncodeJob.reconcileOrphans(spark, outDir).size == committed.size)
+    assert(stable() == committed)
 
     // and the rebuilt table round-trips + resumes like any other
     assert(VerifyJob.run(spark, source, DecodeJob.run(spark, outDir)).ok)
@@ -479,18 +479,19 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
 
   test("EncodeJob.run launches a fixed number of Spark jobs (fresh encode, streaming commit)") {
     import spark.implicits._
-    // fresh table: bounds sample (map stage + collect), encode+write
-    // (shuffle map stage + write), manifest write; no whole-manifest
-    // totals job, since no manifest existed before the run
+    // fresh table: bounds sample (map stage + collect), encode (shuffle
+    // map stage + the collect whose tasks write the chunk files); the
+    // driver writes the manifest with no job, and there is no
+    // whole-manifest totals job, since no manifest existed before the run
     val fresh = tmpDir("graft-jobs-fresh")
     val freshJobs = jobsDuring {
       EncodeJob.run(spark, WebtextGen.pages(spark, 600L, seed = 41L), fresh,
         EncodeJob.Config(numPartitions = 4))
     }
-    assert(freshJobs.size == 5, s"fresh encode launched $freshJobs")
+    assert(freshJobs.size == 4, s"fresh encode launched $freshJobs")
 
     // streaming commit onto a table whose bounds an earlier commit pinned:
-    // encode+write and manifest write only. (A commit whose input is a
+    // the encode's shuffle map stage and its collect only. (A commit whose input is a
     // parquet read inside the measured call, as in perfbench, adds that
     // read's schema-inference job.)
     val stream = tmpDir("graft-jobs-stream")
@@ -502,7 +503,7 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     commit(42L)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(EncodeJob.boundsPath(stream))))
     val commitJobs = jobsDuring { assert(commit(43L).rowsThisRun == 400L) }
-    assert(commitJobs.size == 3, s"streaming commit launched $commitJobs")
+    assert(commitJobs.size == 2, s"streaming commit launched $commitJobs")
   }
 
   test("begin-only attempts roll back (chunk-job completion is unprovable)") {
@@ -514,11 +515,17 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
       .select($"attemptId").distinct().as[String].head()
 
     // crash window: died somewhere inside/just after the chunk job, before
-    // the chunks- marker — only begin- survives. FileOutputCommitter's
-    // commitJob (v1 and v2 alike) is a SEQUENCE of renames, so the chunk
-    // files on disk may be a partial subset; completion is unprovable.
+    // the chunks- marker — only begin- survives. The driver renames the
+    // staged files into chunks/ one by one, so the chunk files on disk
+    // may be a partial subset; completion is unprovable. A file the crash
+    // left unrenamed sits in the attempt's staging dir.
     rmrf(EncodeJob.manifestDir(outDir))
     graft.sources.TableIO.touch(spark, s"${EncodeJob.attemptsDir(outDir)}/begin-$tag")
+    val staged = java.nio.file.Paths.get(EncodeJob.stagingDir(outDir, tag), "part-staged.parquet")
+    java.nio.file.Files.createDirectories(staged.getParent)
+    val committedFile = new java.io.File(EncodeJob.chunksDir(outDir)).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(committedFile.toPath, staged)
 
     // reconcile must NOT launder possibly-partial files into lineage: the
     // attempt rolls back — its chunk files are dropped, nothing enters
@@ -529,6 +536,7 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
       .parquet(EncodeJob.chunksDir(outDir)).count() == 0L,
       "rolled-back attempt left chunk rows behind")
     assert(!graft.sources.TableIO.exists(spark, EncodeJob.manifestDir(outDir)))
+    assert(!java.nio.file.Files.exists(staged.getParent), "rollback left the staging dir")
     val names = graft.sources.TableIO.listDir(spark, EncodeJob.attemptsDir(outDir))
     assert(!names.exists(_.startsWith("begin-")) && !names.exists(_.startsWith("chunks-")))
 
@@ -574,5 +582,36 @@ class EncodePipelineSpec extends AnyFunSuite with SparkFixture {
     assert(r2.rows == 500L)
     assert(VerifyJob.run(spark, source, DecodeJob.run(spark, outDir)).ok)
     source.unpersist()
+  }
+
+  test("staging never reaches reads or lineage") {
+    import spark.implicits._
+    val outDir = tmpDir("graft-staging")
+    EncodeJob.run(spark, WebtextGen.pages(spark, 500L, seed = 23L), outDir,
+      EncodeJob.Config(numPartitions = 4))
+    EncodeJob.run(spark,
+      WebtextGen.pages(spark, 300L, seed = 24L).withColumn("url", concat($"url", lit("/c")))
+        .as[graft.model.Page],
+      outDir, EncodeJob.Config(numPartitions = 4, resume = false,
+        attemptId = Some("batch-1"), wholeTableStats = false))
+    // a successful encode and a commit leave no staging, committer or
+    // marker-of-success files behind
+    Seq(EncodeJob.chunksDir(outDir), EncodeJob.manifestDir(outDir)).foreach { d =>
+      val left = new java.io.File(d).list().filter(n =>
+        n.startsWith("_staging-") || n == "_temporary" || n == "_SUCCESS")
+      assert(left.isEmpty, s"$d holds ${left.toSeq}")
+    }
+    def counts() = (spark.read.format("graft").load(outDir).count(),
+      EncodeJob.chunkMetaScan(spark, outDir).count())
+    val before = counts()
+    assert(before._1 == 800L)
+    // what a straggler writing after the staging delete leaves: a chunk
+    // file in an `_`-prefixed dir
+    val planted = java.nio.file.Paths.get(EncodeJob.chunksDir(outDir), "_staging-x", "part-x.parquet")
+    java.nio.file.Files.createDirectories(planted.getParent)
+    val committedFile = new java.io.File(EncodeJob.chunksDir(outDir)).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(committedFile.toPath, planted)
+    assert(counts() == before, "a staged file reached a read")
   }
 }

@@ -473,7 +473,7 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
       "url =" -> (col("url") === urls(0)),
       "inclusive url range" -> (col("url") >= urls(0) && col("url") <= urls(20)),
       "strict url range" -> (col("url") > urls(0) && col("url") < urls(20)),
-      "warc_ts range" -> (col("warc_ts") >= ts(micros(0)) && col("warc_ts") <= ts(micros(1))))
+      "warc_ts point" -> (col("warc_ts") >= ts(micros(0)) && col("warc_ts") <= ts(micros(0))))
     cases.foreach { case (what, pred) =>
       val scan = checkedScan(dir, encoded(), pred)
       val planned = scan.inputPartitions.length
@@ -482,6 +482,36 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
     }
     // an unfiltered scan plans every file
     assert(checkedScan(dir, encoded(), lit(true)).inputPartitions.length == files)
+  }
+
+  /** The parquet footer of every file directly in `dir`. */
+  private def footers(dir: String): Seq[(String, org.apache.parquet.hadoop.metadata.ParquetMetadata)] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new HPath(f.getPath), spark.sparkContext.hadoopConfiguration))
+        try f.getName -> r.getFooter finally r.close()
+      }
+
+  test("no footer-only chunk files: every chunk file holds a row group") {
+    val fs = footers(s"$dir/chunks")
+    assert(fs.nonEmpty)
+    fs.foreach { case (n, f) => assert(!f.getBlocks.isEmpty, s"$n holds no row group") }
+  }
+
+  test("chunk and manifest files carry the schema Spark derives from the case classes") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+    val conv = new SparkToParquetSchemaConverter()
+    Seq(s"$dir/chunks" -> conv.convert(Encoders.product[graft.model.EncodedChunk].schema),
+        s"$dir/manifest" -> conv.convert(Encoders.product[graft.model.PartitionManifest].schema))
+      .foreach { case (d, want) =>
+        val fs = footers(d)
+        assert(fs.nonEmpty, s"no files in $d")
+        fs.foreach { case (n, f) => assert(f.getFileMetaData.getSchema == want, s"$d/$n") }
+      }
   }
 
   test("the scan reports listed and pruned chunk files as driver metrics") {
