@@ -176,9 +176,6 @@ object EncodeJob {
     * String order (UTF-16 code units) disagrees for supplementary-plane
     * characters, which would make adjacent pids' manifest url ranges
     * overlap and weaken chunk-level range pruning. */
-  def pidOf(bounds: Array[String], url: String): Int =
-    pidOfBytes(bounds.map(_.getBytes(UTF_8)), url.getBytes(UTF_8))
-
   private[jobs] def pidOfBytes(bounds: Array[Array[Byte]], url: Array[Byte]): Int = {
     var lo = 0
     var hi = bounds.length // pid range is [0, bounds.length]
@@ -470,7 +467,7 @@ object EncodeJob {
     // the session's Hadoop conf as the broadcast the DSv2 scan shares,
     // so no task deserializes a conf copy of its own
     val hconf = spark.sessionState.newHadoopConf()
-    val confBc = graft.sources.GraftDataSource.confBroadcast(spark.sparkContext, hconf)
+    val confBc = graft.sources.SerializableConf.broadcast(spark.sparkContext, hconf)
     // Hash repartition on the (already range-derived) pid, WITHOUT the
     // extra sampling pass a repartitionByRange would run over the whole
     // input. Honest balance math: hashing n dense pids into n tasks is

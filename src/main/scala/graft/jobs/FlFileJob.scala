@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 import graft.codec.ReferenceFl
+import graft.sources.SerializableConf
 
 /** File-level FL compress/decompress — the reference CLI's own surface
   * (`compress c|d fl <in> <out>`), re-expressed on Spark.
@@ -112,43 +113,6 @@ object FlFileJob {
       val start = i.toLong * p
       val end = if (i == n - 1) fileSize else start + p
       (start, end)
-    }
-  }
-
-  /** Hadoop Configuration is Writable but not java-Serializable; this
-    * minimal wrapper ships the DRIVER's configuration (with its
-    * spark.hadoop.* overrides and object-store credentials) into tasks
-    * instead of letting executors fall back to bare defaults. (Spark's
-    * own org.apache.spark.util.SerializableConfiguration is
-    * private[spark] at the Scala level — not reusable here.)
-    *
-    * Wire format: the conf's raw entries as one flat key/value string
-    * list, rebuilt into a Configuration on first use in each JVM with
-    * the same `Configuration.set` that `readFields` calls. Writable's
-    * `write`/`readFields` would also gzip every entry's source list —
-    * for a ~1.1k-entry session conf ~7 ms to write and ~5 ms to read,
-    * against ~0.4 ms and ~1 ms here. The list is a plain field, so Java
-    * and Kryo serializers both carry it (a transient field filled by a
-    * custom writeObject would arrive null under Kryo).
-    *
-    * Always broadcast, so the conf ships once per executor, not once per
-    * task: by this object's two jobs, and by the DSv2 connector
-    * ([[graft.sources]]), which shares one broadcast across scans while
-    * [[sameEntries]] holds and opens every chunk file with read options
-    * built from it; the encode's kernel tasks write their chunk files
-    * with the same shared broadcast — the one copy of this wire format
-    * in the codebase. */
-  private[graft] final class SerializableConf(conf: Configuration) extends Serializable {
-    private val entries: Array[String] = {
-      import scala.jdk.CollectionConverters._
-      conf.asScala.iterator.flatMap(e => Iterator(e.getKey, e.getValue)).toArray
-    }
-    def sameEntries(o: SerializableConf): Boolean = entries.sameElements(o.entries)
-    @transient lazy val value: Configuration = {
-      val c = new Configuration(false)
-      var i = 0
-      while (i < entries.length) { c.set(entries(i), entries(i + 1)); i += 2 }
-      c
     }
   }
 

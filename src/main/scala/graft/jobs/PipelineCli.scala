@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
 
 import graft.sources.{GraftDataSource, TableIO, WebtextGen}
@@ -21,8 +21,6 @@ import graft.sources.{GraftDataSource, TableIO, WebtextGen}
   *   stats  <outDir>
   *   flfile c <inFile> <outFlFile> [slices]   (reference `compress c fl`)
   *   flfile d <inFlFile> <outFile> [slices]   (reference `compress d fl`)
-  *   sessionize-stream <inEventsParquet> <outParquet> <checkpointDir>
-  *          [gapMinutes] [watermarkMinutes]   (drain + resume via ckpt)
   *
   * Master/memory come from spark-submit; standalone runs honor
   * SPARK_GRAFT_CPUS (default local[4]).
@@ -76,6 +74,21 @@ object PipelineCli {
       s"duplicate columns requested: $columns — parquet rejects duplicate field names")
     columns
   }
+
+  /** The manifest rows the `stats` verb prints. The engine always writes
+    * the manifest as parquet itself, so it is read with
+    * [[EncodeJob.manifestScan]]'s pinned schema, not through
+    * [[TableIO.read]], which follows `spark.graft.table.format` and
+    * infers the schema (and so fails on a manifest dir that holds only a
+    * crashed write's hidden temp file). A table with no `manifest/` (an
+    * encode of an empty input commits none) reads as zero rows; a
+    * missing table root is a named error. */
+  private[graft] def manifestRows(spark: SparkSession, outDir: String): DataFrame =
+    if (!TableIO.exists(spark, outDir))
+      throw new java.io.FileNotFoundException(s"graft stats: no encoded table at $outDir")
+    else if (!TableIO.exists(spark, EncodeJob.manifestDir(outDir)))
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), EncodeJob.ManifestRows.schema)
+    else EncodeJob.manifestScan(spark, outDir)
 
   def main(args: Array[String]): Unit = {
     args.toList match {
@@ -185,26 +198,14 @@ object PipelineCli {
         println(s"""{"op":"flfile-d","rawBytes":$rawBytes,"out":${graft.JsonEscape.quote(out)},"slices":$slices}""")
         spark.stop()
 
-      // streaming sessionization over a file-sourced event table:
-      // drains available input, appends watermark-final sessions,
-      // resumes open spans from the checkpoint on the next run
-      case "sessionize-stream" :: in :: out :: ckpt :: rest =>
-        val spark = session("graft-sessionize-stream")
-        val gapMin = rest.headOption.map(_.toInt).getOrElse(30)
-        val wmMin = rest.drop(1).headOption.map(_.toInt).getOrElse(60)
-        val total = graft.streaming.SessionizeStream.runFile(spark, in, out, ckpt, gapMin, wmMin)
-        println(s"""{"op":"sessionize-stream","sessionsTotal":$total,"out":${graft.JsonEscape.quote(out)},"gapMinutes":$gapMin,"watermarkMinutes":$wmMin}""")
-        spark.stop()
-
       case "stats" :: outDir :: Nil =>
         val spark = session("graft-stats")
-        val m = TableIO.read(spark, EncodeJob.manifestDir(outDir))
-        m.orderBy("pid").show(100, truncate = false)
+        manifestRows(spark, outDir).orderBy("pid").show(100, truncate = false)
         spark.stop()
 
       case other =>
         System.err.println(s"unknown args: ${other.mkString(" ")}")
-        System.err.println("usage: gen|encode|decode|verify|stats ... (see scaladoc)")
+        System.err.println("usage: gen|ingest|encode|decode|verify|stats|flfile ... (see scaladoc)")
         sys.exit(2)
     }
   }

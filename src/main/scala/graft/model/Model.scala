@@ -1,11 +1,11 @@
 package graft.model
 
 /** THE definition of the Timestamp <-> epoch-micros conversion used by
-  * the encode kernel, the decode kernels, the DSv2 pushdown and the
-  * streaming sessionizer. One definition: the codebase once carried four
-  * private copies in two equivalent-but-different spellings, and a
-  * future edge-case fix (say pre-epoch handling) applied to one copy
-  * would silently break encode/decode/streaming timestamp agreement. */
+  * the encode kernel, the DSv2 pushdown and the benchmark's answer
+  * checks. One definition: the codebase once carried four private
+  * copies in two equivalent-but-different spellings, and a future
+  * edge-case fix (say pre-epoch handling) applied to one copy would
+  * silently break encode/decode timestamp agreement. */
 object TsMicros {
   /** Exact micros, floor semantics for pre-epoch instants (getTime's
     * millis and getNanos are both already normalized to [0, 1s)). */

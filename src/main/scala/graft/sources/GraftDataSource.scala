@@ -16,7 +16,6 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{GroupType, MessageType, Type => PType, Types}
-import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -35,7 +34,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codec.ColumnCodec
-import graft.jobs.FlFileJob.SerializableConf
 
 /** DataSource V2 read surface for the engine's encoded chunk table —
   * the declarative twin of the reference CLI's decompress direction
@@ -97,10 +95,10 @@ import graft.jobs.FlFileJob.SerializableConf
   * footer at plan time. The scan reports `chunkFilesListed` and
   * `chunkFilesPruned` as driver metrics. The session's Hadoop conf
   * ships as a broadcast key/value list
-  * ([[graft.jobs.FlFileJob.SerializableConf]]), not inside every task's
+  * ([[SerializableConf]]), not inside every task's
   * reader factory, and consecutive scans share one broadcast while the
   * session's Hadoop settings stay the same
-  * ([[GraftDataSource.confBroadcast]]). Every chunk file is opened with
+  * ([[SerializableConf.broadcast]]). Every chunk file is opened with
   * parquet read options built from that conf
   * ([[GraftDataSource.openChunk]]) — so a task's fixed cost is one
   * footer read, not a conf rebuild.
@@ -135,6 +133,14 @@ object GraftDataSource {
     StructField("text", StringType),
     StructField("lang", StringType)))
 
+  /** Raw compressed bytes UNDERSTATE the decoded relation ~4x (the
+    * measured corpus ratio), and an underestimate is the unsafe
+    * direction for broadcast decisions — a 9 MB-on-disk table that
+    * decodes to 90 MB must not slip under the autoBroadcast threshold.
+    * [[GraftScan.estimateStatistics]] scales the planned files' size by
+    * this ratio ceiling (same idea as Spark's fileCompressionFactor). */
+  private[sources] val DecodedSizeFactor = 4.0
+
   /** Opens one chunk file with read options built from `conf` (the
     * task's copy of the broadcast session conf). The one-argument
     * `ParquetFileReader.open(InputFile)` builds default options around a
@@ -145,24 +151,6 @@ object GraftDataSource {
 
   private def open(in: HadoopInputFile, conf: Configuration): ParquetFileReader =
     ParquetFileReader.open(in, HadoopReadOptions.builder(conf, in.getPath).build())
-
-  /** The last scan's conf broadcast, with its SparkContext and entries. */
-  private var sharedConf: (SparkContext, SerializableConf, Broadcast[SerializableConf]) = null
-
-  /** `conf` as a broadcast. Consecutive scans in one session carry the
-    * same entries, so a scan reuses the previous scan's broadcast when
-    * its SparkContext and entries match; a fresh broadcast per scan cost
-    * ~4 ms of planning (serialize and write to the block store) plus a
-    * Configuration rebuild in each executor's first task. A changed
-    * setting is a new broadcast. The encode's kernel tasks open their
-    * chunk files with the same broadcast ([[graft.jobs.EncodeJob.run]]). */
-  private[graft] def confBroadcast(sc: SparkContext, conf: Configuration)
-      : Broadcast[SerializableConf] = synchronized {
-    val wire = new SerializableConf(conf)
-    if (sharedConf == null || !(sharedConf._1 eq sc) || !sharedConf._2.sameEntries(wire))
-      sharedConf = (sc, wire, sc.broadcast(wire))
-    sharedConf._3
-  }
 
   /** ts statistics are schema-gated per FILE: a pre-round-7 chunk file
     * has no tsMin/tsMax columns, and a predicate referencing a missing
@@ -745,18 +733,8 @@ final class GraftScan(path: String, required: StructType,
     else partitions.toArray[InputPartition]
 
   override def estimateStatistics(): Statistics = new Statistics {
-    // raw compressed bytes UNDERSTATE the decoded relation ~4x (the
-    // measured corpus ratio), and an underestimate is the unsafe
-    // direction for broadcast decisions — a 9 MB-on-disk table that
-    // decodes to 90 MB must not slip under the autoBroadcast
-    // threshold. Scale by the ratio ceiling (same idea as Spark's
-    // fileCompressionFactor); conf-overridable per deployment.
-    override def sizeInBytes(): OptionalLong = {
-      val factor = SparkSession.active.conf
-        .getOption("spark.graft.read.sizeFactor")
-        .flatMap(_.toDoubleOption).getOrElse(4.0)
-      OptionalLong.of((partitions.map(_.length).sum * factor).toLong)
-    }
+    override def sizeInBytes(): OptionalLong =
+      OptionalLong.of((partitions.map(_.length).sum * GraftDataSource.DecodedSizeFactor).toLong)
     override def numRows(): OptionalLong = OptionalLong.empty()
   }
 
@@ -765,7 +743,7 @@ final class GraftScan(path: String, required: StructType,
   // executor's broadcast cache instead of each deserializing a copy
   // carried in the task binary (Spark's own FileScan does the same)
   private lazy val conf: Broadcast[SerializableConf] =
-    GraftDataSource.confBroadcast(SparkSession.active.sparkContext, hconf)
+    SerializableConf.broadcast(SparkSession.active.sparkContext, hconf)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(conf, required.fieldNames, bounds, aggTokens)

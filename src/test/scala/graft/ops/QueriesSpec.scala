@@ -181,6 +181,65 @@ class QueriesSpec extends AnyFunSuite with SparkFixture {
       s"cohort mismatch: $cohort")
   }
 
+  test("sessionize: >30-min gaps split, late and straggler events, ordinals, NaN fails loudly") {
+    import spark.implicits._
+    def ts(minutes: Long): java.sql.Timestamp =
+      new java.sql.Timestamp(1700000000000L + minutes * 60000L)
+    val justOver = ts(60)
+    justOver.setNanos(1000) // 30 min + 1 µs after u7's second event
+    // (user_id, event_id, ts, value). Row order is arrival order and does
+    // not matter to the query: u4's ts(80) arrives after its ts(100) and
+    // merges BACKWARDS into one session starting at 80; u5's ts(100) is
+    // older than its ts(200) by more than the gap (its own session); u6's
+    // ts(0)/ts(20) stragglers chain into ONE session before its ts(300).
+    // u7 sits on the boundary: exactly 30 min does not split, 30 min plus
+    // 1 µs does.
+    val events = Seq(
+      (1L, 1L, ts(0), 1.00), (1L, 2L, ts(10), 2.00),
+      (2L, 3L, ts(0), 0.50), (2L, 4L, ts(45), 1.25),
+      (3L, 5L, ts(5), 3.00),
+      (4L, 9L, ts(100), 1.00),
+      (5L, 11L, ts(200), 1.00),
+      (6L, 13L, ts(300), 1.00),
+      (2L, 6L, ts(60), 0.25),
+      (1L, 7L, ts(55), 4.00),
+      (3L, 8L, ts(20), 1.00),
+      (4L, 10L, ts(80), -0.005),
+      (5L, 12L, ts(100), 2.00),
+      (6L, 14L, ts(0), 1.00), (6L, 15L, ts(20), 2.00),
+      (7L, 16L, ts(0), 1.00), (7L, 17L, ts(30), 1.00), (7L, 18L, justOver, 1.00))
+    def sessions(evs: Seq[(Long, Long, java.sql.Timestamp, Double)]) = {
+      val dir = tmpDir("graft-queries-sessionize")
+      evs.toDF("user_id", "event_id", "ts", "value").write.parquet(s"$dir/events.parquet")
+      Queries.qSessionize(spark, dir)
+    }
+    val got = sessions(events)
+      .as[(Long, Long, Long, java.sql.Timestamp, java.sql.Timestamp, Long)].collect()
+      .sortBy(r => (r._1, r._2)).toSeq
+    // (user_id, session_id, n_events, t_start, t_end, cents); cents sum
+    // round(value * 100) per event, HALF_UP: u4's −0.005 is −1 cent
+    assert(got == Seq(
+      (1L, 1L, 2L, ts(0), ts(10), 300L),    // 10-min gap: one session
+      (1L, 2L, 1L, ts(55), ts(55), 400L),   // 45-min gap splits
+      (2L, 1L, 1L, ts(0), ts(0), 50L),
+      (2L, 2L, 2L, ts(45), ts(60), 150L),
+      (3L, 1L, 2L, ts(5), ts(20), 400L),
+      (4L, 1L, 2L, ts(80), ts(100), 99L),   // late event merged backwards
+      (5L, 1L, 1L, ts(100), ts(100), 200L), // straggler: its own session
+      (5L, 2L, 1L, ts(200), ts(200), 100L),
+      (6L, 1L, 2L, ts(0), ts(20), 300L),    // straggler chain: one session
+      (6L, 2L, 1L, ts(300), ts(300), 100L),
+      (7L, 1L, 2L, ts(0), ts(30), 200L),    // exactly 30 min: same session
+      (7L, 2L, 1L, justOver, justOver, 100L)),
+      s"sessions mismatch: $got")
+
+    // a NaN value fails with ANSI's named overflow, not a wrong session
+    val err = intercept[Exception] {
+      sessions(Seq((1L, 1L, ts(0), Double.NaN), (1L, 2L, ts(10), 2.00))).collect()
+    }
+    assert(err.getMessage.contains("CAST_OVERFLOW"), s"failed differently: ${err.getMessage}")
+  }
+
   test("latest-event compaction, pivot/unpivot, and bigram PMI on hand-computed fixtures") {
     import spark.implicits._
     val dir = tmpDir("graft-queries-compact")

@@ -565,12 +565,12 @@ class GraftDataSourceSpec extends AnyFunSuite with SparkFixture with AdaptiveSpa
 
   test("consecutive scans share the conf broadcast until a Hadoop setting changes") {
     val sc = spark.sparkContext
-    val a = GraftDataSource.confBroadcast(sc, spark.sessionState.newHadoopConf())
-    val b = GraftDataSource.confBroadcast(sc, spark.sessionState.newHadoopConf())
+    val a = SerializableConf.broadcast(sc, spark.sessionState.newHadoopConf())
+    val b = SerializableConf.broadcast(sc, spark.sessionState.newHadoopConf())
     assert(a.id == b.id, "an unchanged conf was broadcast again")
     val changed = spark.sessionState.newHadoopConf()
     changed.set("graft.spec.probe", "1")
-    val c = GraftDataSource.confBroadcast(sc, changed)
+    val c = SerializableConf.broadcast(sc, changed)
     assert(c.id != b.id && c.value.value.get("graft.spec.probe") == "1")
   }
 

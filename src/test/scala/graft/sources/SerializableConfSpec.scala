@@ -1,4 +1,4 @@
-package graft.jobs
+package graft.sources
 
 import scala.jdk.CollectionConverters._
 
@@ -7,10 +7,9 @@ import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
-import graft.jobs.FlFileJob.SerializableConf
 
-/** The conf wire format shared by FlFileJob's broadcasts and the DSv2
-  * reader factory: a flat key/value list that must rebuild the shipped
+/** The conf wire format shared by FlFileJob's broadcasts, the DSv2
+  * reader factory and the encode's kernel tasks: a flat key/value list that must rebuild the shipped
   * Configuration entry for entry, under either Spark serializer a
   * broadcast may go through. */
 class SerializableConfSpec extends AnyFunSuite with SparkFixture {
